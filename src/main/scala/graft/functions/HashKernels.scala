@@ -1142,16 +1142,10 @@ object HashKernels {
   def token_array(text: Column): Column =
     GraftSqlBridge.column(TokenArray(GraftSqlBridge.expression(text)))
 
-  /** `size(filter(tokens(text), _.isin(words…)))` fused; the composed
-    * form stays behind the shared text-stat A/B seam (default fused). */
+  /** Count of whitespace tokens (the Tokenize rule) equal to any of
+    * `words`. */
   def token_hits(text: Column, words: Seq[String]): Column =
-    if (org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.textStatFuse", "1") == "1")
-      GraftSqlBridge.column(TokenHits(GraftSqlBridge.expression(text), words))
-    else
-      org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.filter(
-          Tokenize.tokens(text), x => x.isin(words: _*)))
+    GraftSqlBridge.column(TokenHits(GraftSqlBridge.expression(text), words))
 }
 
 /** Catalyst expression: count of whitespace tokens equal to any of the

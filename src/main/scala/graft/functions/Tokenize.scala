@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** THE whitespace-token rule, defined once.
   *
@@ -13,16 +12,7 @@ import org.apache.spark.sql.functions._
   * the kernels in lockstep, which is why the rule lives in one place.
   */
 object Tokenize {
-  /** Fused (optimization r18): the composed
-    * `filter(split(c, " "), x => x =!= "")` ran its ArrayFilter lambda
-    * INTERPRETED per element on every composed tokenize in the catalog;
-    * the TokenArray kernel emits the identical token array in one
-    * codegen'd byte pass. Composed form kept behind the A/B seam
-    * (`spark.graft.tokenFuse`, read from the build-thread SQLConf)
-    * only; default fused. */
-  def tokens(c: Column): Column =
-    if (org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.tokenFuse", "1") == "1")
-      HashKernels.token_array(c)
-    else filter(split(c, " "), x => x =!= "")
+  /** The non-empty single-space-delimited tokens of `c`, emitted by
+    * the TokenArray kernel in one codegen'd byte pass. */
+  def tokens(c: Column): Column = HashKernels.token_array(c)
 }

@@ -338,43 +338,26 @@ object CorpusOps {
       .orderBy("doc_id")
   }
 
+  /** Per-doc adjacent-token-pair rows (doc_id, w1, w2) — the shared
+    * emission of q89/q95. The token_bigrams kernel emits the pairs in
+    * one codegen'd byte pass, and explode of an empty array drops
+    * <2-token docs. */
+  private def bigramRows(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.tSpread(s, dir, "documents")
+      .select(col("doc_id"),
+        explode(graft.functions.HashKernels.token_bigrams(col("text"))).as("p"))
+      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+
   /** Adjacent-token-pair frequencies — the counting step of one
     * BPE/WordPiece merge round (Sennrich et al. 2016 §3.2, lifted from
     * chars to whitespace tokens): the top-20 most frequent adjacent
     * pairs are the merge candidates, with corpus occurrence and
-    * document-frequency counts. Pairs are emitted map-side from a
-    * zip_with over two slice views of the token array (codegen'd, no
-    * explode of intermediate structs); ONE hash aggregation on the pair
+    * document-frequency counts. Pairs are emitted map-side by
+    * [[bigramRows]]; ONE hash aggregation on the pair
     * is the only corpus shuffle (count + distinct-doc count share it as
     * a partial-agg pair), and the top-20 plans as TakeOrderedAndProject
     * — per-partition heads, no global sort. Count-desc then pair-asc
     * makes the cut deterministic cross-engine. */
-  /** Per-doc adjacent-token-pair rows (doc_id, w1, w2) — the shared
-    * emission of q89/q95. Fused (optimization r18): the composed
-    * zip_with-over-two-slice-views form ran its lambda INTERPRETED per
-    * pair; the token_bigrams kernel emits the identical pairs in one
-    * codegen'd byte pass (and explode of an empty array drops <2-token
-    * docs, so the size-filter tokenize pass is gone too). Composed form
-    * kept behind the A/B seam only; default fused. */
-  private def bigramRows(s: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.tSpread(s, dir, "documents")
-    if (s.conf.get("spark.graft.bigramFuse", "1") == "1")
-      docs.select(col("doc_id"),
-          explode(graft.functions.HashKernels.token_bigrams(col("text"))).as("p"))
-        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-    else {
-      val tk = tokens(col("text"))
-      docs.select(col("doc_id"), tk.as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .select(col("doc_id"),
-          explode(zip_with(
-            slice(col("tk"), lit(1), size(col("tk")) - 1),
-            slice(col("tk"), lit(2), size(col("tk")) - 1),
-            (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-    }
-  }
-
   def tokenPairMerges(s: SparkSession, dir: String): DataFrame = {
     bigramRows(s, dir)
       .select(col("doc_id"), concat(col("w1"), lit(" "), col("w2")).as("pair"))

@@ -33,15 +33,6 @@ object NearDupOps {
           concat_ws(" ", (0 until n).map(j => element_at(tk, i + j)): _*))))
   }
 
-  /** MinHash signature: for each of k hash functions, the minimum hash
-    * over the document's shingle set. Entirely per-row (no shuffle).
-    * Delegates to the fused Catalyst kernel
-    * (graft.functions.MinHashSignature): the composed
-    * transform/array_min form runs interpreted and was ~100× slower at
-    * sf0.1 (289 s → <3 s). */
-  def minhashSignature(shingleCol: Column, k: Int): Column =
-    graft.functions.HashKernels.minhash_signature(shingleCol, k)
-
   /** LSH band digests: the k-length signature split into `bands`
     * slices, each digested to ONE long — xxhash64 over (band index,
     * slice values). Docs sharing any band digest are candidates.

@@ -74,18 +74,9 @@ object QualityOps {
       .filter(size(col("tk")) >= 1)
       .select(col("doc_id"),
         size(col("tk")).cast("long").as("n_words"),
-        // Fused (optimization r18): sum of token lengths = the
-        // non-space char count (SelectionOps.labeled's trick) and the
-        // stop count rides the token_hits kernel — the composed
-        // aggregate/filter lambdas ran interpreted per token. Composed
-        // forms behind the shared text-stat seam (token_hits gates
-        // itself).
-        (if (org.apache.spark.sql.internal.SQLConf.get
-            .getConfString("spark.graft.textStatFuse", "1") == "1")
-          length(translate(col("text"), " ", "")).cast("long")
-        else
-          aggregate(transform(col("tk"), w => length(w)),
-            lit(0L), (acc, x) => acc + x)).as("sum_wlen"),
+        // sum of token lengths = the non-space char count
+        // (SelectionOps.labeled's trick), codegen'd with no lambda
+        length(translate(col("text"), " ", "")).cast("long").as("sum_wlen"),
         graft.functions.HashKernels.token_hits(col("text"), stop)
           .cast("long").as("n_stop"))
       .withColumn("mean_word_len",

@@ -35,17 +35,9 @@ object TextOps {
         size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+"), lit(0))).as("n_pieces"),
         when(size(toks) === 0, 0.0)
           .otherwise(
-            // Fused (optimization r18): sum of token lengths = the
-            // non-space char count (the SelectionOps labeled() trick) —
-            // length(translate(...)) is codegen'd where the composed
-            // aggregate(transform(...)) ran interpreted per token.
-            // Composed form behind the shared text-stat seam.
-            (if (org.apache.spark.sql.internal.SQLConf.get
-                .getConfString("spark.graft.textStatFuse", "1") == "1")
-              length(translate(col("text"), " ", "")).cast("long")
-            else
-              aggregate(transform(toks, x => length(x).cast("long")),
-                lit(0L), _ + _))
+            // sum of token lengths = the non-space char count (the
+            // SelectionOps labeled() trick), codegen'd with no lambda
+            length(translate(col("text"), " ", "")).cast("long")
               .cast("double") / size(toks))
           .as("mean_token_len"))
       .orderBy("doc_id")
@@ -504,19 +496,11 @@ object TextOps {
       .agg(
         count(lit(1)).as("n_paras"),
         sum(when(col("is_first"), 1L).otherwise(0L)).as("n_kept"),
-        // Fused (optimization r18): the composed
-        // array_join(transform(array_sort(collect_list(...)))) rebuild
-        // ran its sort comparator + field-pluck lambdas INTERPRETED per
-        // doc; the kernel does one codegen'd sort+join pass. para_idx
-        // is unique per doc, so ordering is identical. Seam for the
-        // A/B harness only; default ON.
-        (if (paras.sparkSession.conf.get("spark.graft.paraJoinFuse", "1") == "1")
-          graft.functions.HashKernels.sorted_para_join(collect_list(
-            when(col("is_first"), struct(col("para_idx"), col("para")))))
-        else
-          array_join(transform(array_sort(collect_list(
-            when(col("is_first"), struct(col("para_idx"), col("para"))))),
-            x => x.getField("para")), " ")).as("cleaned_text"))
+        // kept paragraphs re-joined in para_idx order (unique per doc),
+        // one codegen'd sort+join pass per doc
+        graft.functions.HashKernels.sorted_para_join(collect_list(
+          when(col("is_first"), struct(col("para_idx"), col("para")))))
+          .as("cleaned_text"))
     outDocs.select(col("doc_id"))
       .join(stats, Seq("doc_id"), "left")
       .select(col("doc_id"),

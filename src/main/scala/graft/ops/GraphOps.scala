@@ -43,12 +43,8 @@ object GraphOps {
     * table (before staging, the first graph query of EVERY session
     * paid the lineitem distinct + self-join + distinct). */
   /** shuffle_hash hint on the small (score/frontier) side of the
-    * iterative joins, gated on a session conf so the A/B harness
-    * (tools.ABConf) can flip it in one session; default ON. */
-  private def shj(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.shjHints", "1") == "1")
-      df.hint("shuffle_hash")
-    else df
+    * iterative joins. */
+  private def shj(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
   private def memo(s: SparkSession, name: String, dir: String)
       (build: => DataFrame): DataFrame =

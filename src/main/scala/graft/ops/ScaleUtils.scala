@@ -93,18 +93,13 @@ object ScaleUtils {
     * no global rank window over the |keys| profile anywhere. */
   def keySkewProfile(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import graft.Tables.t
-    // Pinned (optimization r18, guide §2.4): the per-key count frame is
-    // consumed by THREE branches (base stats, the distinct-cnt
-    // histogram, and the top-5 limit) — unmaterialized, each branch
-    // re-ran the fact-sized aggregation, the only fact-scaled shuffle
-    // in the query. One |keys|-row checkpoint replaces two full
-    // re-aggregations. Composed form behind the A/B seam; default on.
-    val countsRaw = t(s, dir, "lineitem")
-      .groupBy(col("l_partkey").as("key")).agg(count(lit(1)).as("cnt"))
-    val counts =
-      if (s.conf.get("spark.graft.q116pin", "1") == "1")
-        graft.Materialize.stable(countsRaw)
-      else countsRaw
+    // Pinned: the per-key count frame is consumed by THREE branches
+    // (base stats, the distinct-cnt histogram, and the top-5 limit) —
+    // unmaterialized, each branch re-runs the fact-sized aggregation,
+    // the only fact-scaled shuffle in the query. One |keys|-row
+    // checkpoint replaces two full re-aggregations.
+    val counts = graft.Materialize.stable(t(s, dir, "lineitem")
+      .groupBy(col("l_partkey").as("key")).agg(count(lit(1)).as("cnt")))
     val base = counts.agg(
       count(lit(1)).as("n_keys"),
       sum(col("cnt")).as("n_rows"),

@@ -103,13 +103,9 @@ import org.apache.spark.sql.types.StructType
   * this call). A rename that fails with NO occupant has no such benign
   * explanation — a genuinely concurrent foreign writer — and throws.
   *
-  * Knobs (system properties, read per call so specs/soaks can flip
-  * them): `graft.delta.singleLevel=true` restores the round-11 single-
-  * level fold (everything into one segment per cadence point) — kept as
-  * the soak CONTROL so the tiered fold-cost claim is measured against
-  * its predecessor, not argued. `graft.delta.verbose=true` prints one
-  * line per publish (covered span, wall seconds) — the soak's
-  * fold-cost curve. */
+  * Knob (system property, read per call): `graft.delta.verbose=true`
+  * prints one line per publish (covered span, wall seconds) — the
+  * soak's fold-cost curve. */
 object DeltaDirs {
 
   private def fsOf(s: SparkSession, dir: String) = {
@@ -218,7 +214,6 @@ object DeltaDirs {
   def compact(s: SparkSession, deltaDir: String,
       subs: Seq[(String, StructType)], upTo: Long): Boolean = {
     val (p, fs) = fsOf(s, deltaDir)
-    val singleLevel = sys.props.get("graft.delta.singleLevel").contains("true")
     val verbose = sys.props.get("graft.delta.verbose").contains("true")
 
     // finish a crashed predecessor's prune: covered b dirs, non-maximal
@@ -299,17 +294,6 @@ object DeltaDirs {
     prune()
     var (chain, bs) = layout(fs, p, upTo)
     var published = false
-
-    if (singleLevel && (bs.nonEmpty || chain.length > 1)) {
-      // round-11 behavior, kept as the soak control: everything below
-      // upTo into ONE segment per call
-      val lo = chain.headOption.map(_.lo).getOrElse(bs.min)
-      val hi = (chain.map(_.hi) ++ bs).max
-      val srcs = chain.map(sg => new org.apache.hadoop.fs.Path(p, sg.name)) ++
-        bs.map(id => new org.apache.hadoop.fs.Path(p, s"b$id"))
-      return publish(lo, hi, srcs)
-    }
-    if (singleLevel) return false
 
     // 1. fold the live b dirs into one new young segment. Its range
     // starts just above the chain's cover (contiguity keeps the family

@@ -25,20 +25,8 @@ object ABConf {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (sys.env.get("SPARK_GRAFT_WARM_INDEXES").contains("1")) try {
-      graft.llm.IvfIndex.ensure(spark, sfDir)
-      graft.llm.BandIndex.ensure(spark, sfDir,
-        graft.llm.BandIndex.Boundary.ingestMod10)
-      graft.llm.BandIndex.ensure(spark, sfDir,
-        graft.llm.BandIndex.Boundary.all)
-      graft.llm.PostingIndex.ensure(spark, sfDir)
-      graft.llm.SemDedupIndex.ensure(spark, sfDir)
-      graft.llm.MediaFpIndex.ensure(spark, sfDir)
-      graft.llm.ParaDigestIndex.ensure(spark, sfDir)
-      graft.llm.OverlapSketchIndex.ensure(spark, sfDir)
-      graft.llm.SpanDigestIndex.ensure(spark, sfDir)
-      graft.ops.GraphIndex.ensure(spark, sfDir)
-    } catch { case _: Throwable => () }
+    if (sys.env.get("SPARK_GRAFT_WARM_INDEXES").contains("1"))
+      graft.StagedIndexes.ensureAll(spark, sfDir)
     // one discarded warmup rep per arm
     for (v <- Seq("0", "1")) {
       spark.conf.set(key, v)

@@ -17,8 +17,9 @@ object ExplainAudit {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
-    // Optional leading --conf key=value args (A/B seam flags) so a
-    // "before" plan can be dumped without reverting the code.
+    // Optional leading --conf key=value args (session conf keys such
+    // as spark.graft.bandBreakEven) so a plan under a non-default
+    // setting can be dumped without changing the code.
     val (confs, rest) = args.partition(_.startsWith("--conf"))
     confs.map(_.stripPrefix("--conf").stripPrefix("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

@@ -54,20 +54,8 @@ object StageProfile {
             tm.memoryBytesSpilled)
         }
     })
-    if (sys.env.get("SPARK_GRAFT_WARM_INDEXES").contains("1")) try {
-      graft.llm.IvfIndex.ensure(spark, sfDir)
-      graft.llm.BandIndex.ensure(spark, sfDir,
-        graft.llm.BandIndex.Boundary.ingestMod10)
-      graft.llm.BandIndex.ensure(spark, sfDir,
-        graft.llm.BandIndex.Boundary.all)
-      graft.llm.PostingIndex.ensure(spark, sfDir)
-      graft.llm.SemDedupIndex.ensure(spark, sfDir)
-      graft.llm.MediaFpIndex.ensure(spark, sfDir)
-      graft.llm.ParaDigestIndex.ensure(spark, sfDir)
-      graft.llm.OverlapSketchIndex.ensure(spark, sfDir)
-      graft.llm.SpanDigestIndex.ensure(spark, sfDir)
-      graft.ops.GraphIndex.ensure(spark, sfDir)
-    } catch { case _: Throwable => () }
+    if (sys.env.get("SPARK_GRAFT_WARM_INDEXES").contains("1"))
+      graft.StagedIndexes.ensureAll(spark, sfDir)
     for (n <- names; r <- 1 to reps) {
       lock.synchronized { stages.clear(); jobs = 0 }
       val t0 = System.nanoTime()

@@ -247,20 +247,4 @@ class DeltaDirsSpec extends AnyFunSuite {
     assert(dirNames(root) == Seq("t0_3"), dirNames(root))
     assert(rows(root, "") == Seq(0L, 1L, 2L, 3L))
   }
-
-  test("single-level control mode reproduces the round-11 shape and " +
-      "identical rows (the soak control)") {
-    val root = java.nio.file.Files.createTempDirectory("deltadirs12").toString
-    val subs = Seq("" -> schema)
-    System.setProperty("graft.delta.singleLevel", "true")
-    try {
-      (0L to 5L).foreach { i =>
-        Seq(i).toDF("x").write.parquet(s"$root/b$i")
-        if (i > 0) DeltaDirs.compact(spark, root, subs, i)
-      }
-      assert(dirNames(root) == Seq("b5", "t0_4"),
-        "single-level mode must keep exactly one segment")
-      assert(rows(root, "") == (0L to 5L))
-    } finally System.clearProperty("graft.delta.singleLevel")
-  }
 }
