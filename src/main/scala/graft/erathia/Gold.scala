@@ -2,6 +2,7 @@ package graft.erathia
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Gold layer: the four data marts of
   * /root/reference/src/gold_aggregator.py:27-125, re-expressed as
@@ -16,8 +17,11 @@ import org.apache.spark.sql.functions._
   * against `Gold.run`'s parquet output.
   *
   * Every mart is scan → broadcast-joins → filter → hash-agg → sort
-  * [→ limit]; dims are broadcast (≤368 rows), the only shuffle is the
-  * aggregation exchange, and AQE coalesces its partitions. ROUND lands
+  * [→ limit]; dims are broadcast (≤368 rows, one job each). The
+  * aggregation exchange is the one shuffle that grows with the data, and
+  * AQE coalesces its partitions. The aggregate's output is bounded by
+  * dimension cardinality, so the sorted marts move it to one partition
+  * and sort there: no range exchange, no sampling job. ROUND lands
   * post-aggregation exactly where the reference rounds.
   */
 object Gold {
@@ -36,7 +40,8 @@ object Gold {
         round(sell, 2).as("Total Gold Earned"),
         round(sell - buy, 2).as("Net Profit"),
         count(lit(1)).as("Total Transactions"))
-      .orderBy(col("Net Profit").desc)
+      // bounded at any scale: one row per faction
+      .repartition(1).orderBy(col("Net Profit").desc)
   }
 
   /** dm_resource_price_history (gold_aggregator.py:56-75): Resources
@@ -56,7 +61,8 @@ object Gold {
       .agg(
         round(avg(col("gold_per_unit")), 2).as("Average Price"),
         round(sum(col("quantity")), 2).as("Total Quantity Traded"))
-      .orderBy(col("Year"), col("Month"), col("Resource Name"))
+      // bounded at any scale: at most resources × months rows
+      .repartition(1).orderBy(col("Year"), col("Month"), col("Resource Name"))
 
   /** dm_top_vip_customers (gold_aggregator.py:83-101): VIP segment only
     * (NO transaction-type filter — the reference pivots BUY/SELL into
@@ -92,7 +98,8 @@ object Gold {
       .agg(
         count(col("trade_key")).as("Total Sold"),
         round(sum(col("gold_total")), 2).as("Total Gold Value"))
-      .orderBy(col("Total Sold").asc, col("Total Gold Value").desc)
+      // bounded at any scale: one row per artifact
+      .repartition(1).orderBy(col("Total Sold").asc, col("Total Gold Value").desc)
 
   /** SQL twins — the reference's gold stage IS SQL (CTAS statements in
     * gold_aggregator.py); these are those statements minus the CTAS
@@ -166,6 +173,11 @@ object Gold {
     marts.foreach { case (name, f) =>
       val df = f(s)
       df.coalesce(1).write.mode("overwrite").parquet(s"$goldDir/$name")
-      s.read.parquet(s"$goldDir/$name").createOrReplaceTempView(name)
+      register(s, goldDir, name, df.schema)
     }
+
+  /** Temp view of the mart written under `goldDir`, read with the schema
+    * of the frame that wrote it, so registering starts no inference job. */
+  def register(s: SparkSession, goldDir: String, mart: String, schema: StructType): Unit =
+    s.read.schema(schema).parquet(s"$goldDir/$mart").createOrReplaceTempView(mart)
 }

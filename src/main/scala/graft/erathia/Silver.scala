@@ -3,6 +3,8 @@ package graft.erathia
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{BooleanType, StructType}
+import graft.schema.Schemas
 
 /** Silver layer: cleaning + enrichment, re-expressing
   * /root/reference/src/silver_processor.py:7-96 Spark-first.
@@ -55,27 +57,35 @@ object Silver {
     // Bronze is the ingest boundary: every read is validated against the
     // declared schema (schema.Schemas.erathia) and fails fast on drift.
     val fact = cleanFact(
-      graft.schema.Schemas.readErathia(s, s"$bronzeDir/fact_sales", "fact_sales"))
+      Schemas.readErathia(s, s"$bronzeDir/fact_sales", "fact_sales"))
     fact.write.mode("overwrite").partitionBy("year", "month")
       .parquet(s"$silverDir/fact_sales")
 
     dims.foreach { d =>
-      val cleaned = graft.schema.Schemas.readErathia(s, s"$bronzeDir/$d", d)
+      // one partition: a dimension, written as one file by one task
+      val cleaned = Schemas.readErathia(s, s"$bronzeDir/$d", d).coalesce(1)
         .transform(dedupByKey(keyOf(d)))
         .transform(df => if (d == "dim_customer") enrichCustomer(df) else df)
-      cleaned.coalesce(1).write.mode("overwrite").parquet(s"$silverDir/$d")
+      cleaned.write.mode("overwrite").parquet(s"$silverDir/$d")
     }
 
     registerFromDisk(s, silverDir)
     s.table("fact_sales").count()
   }
 
+  /** Schema of silver table `t`: cleaning and dedup keep the bronze
+    * declaration; enrichCustomer appends is_hero. */
+  def schema(t: String): StructType =
+    if (t == "dim_customer") Schemas.erathia(t).add("is_hero", BooleanType)
+    else Schemas.erathia(t)
+
   /** Register the silver tables of an existing on-disk layer as temp
     * views — lets Gold (and a restarted CLI session) run against a
     * silver layer produced by an earlier session, the way the
-    * reference's persistent DuckDB file does. */
+    * reference's persistent DuckDB file does. Reads with the known
+    * silver schema, so registering starts no inference job. */
   def registerFromDisk(s: SparkSession, silverDir: String): Unit =
     (dims :+ "fact_sales").foreach { t =>
-      s.read.parquet(s"$silverDir/$t").createOrReplaceTempView(t)
+      s.read.schema(schema(t)).parquet(s"$silverDir/$t").createOrReplaceTempView(t)
     }
 }

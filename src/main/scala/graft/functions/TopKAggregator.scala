@@ -6,12 +6,14 @@ import org.apache.spark.sql.expressions.Aggregator
 /** Typed top-k aggregator (SURVEY.md §2.9's one custom-Aggregator
   * candidate).
   *
-  * The window form of per-group top-k (`row_number().over(...) <= k`)
-  * shuffles every row to its group's partition and sorts there. This
-  * Aggregator keeps a bounded k-buffer per group on the map side, so only
-  * k candidates per group per input partition cross the shuffle —
-  * the right trade at 100 TB when k ≪ group size. Ordering is total
-  * (value desc, then id asc) so results are deterministic under ties.
+  * Spark 4.1 plans the window form of per-group top-k
+  * (`row_number().over(...) <= k`) with a Partial `WindowGroupLimit`
+  * before the exchange and a Final one after it (docs/PLANS.txt), so it
+  * too ships at most k candidates per group per input partition; what it
+  * pays for that is a full sort of each map-side partition. This
+  * Aggregator keeps a bounded k-buffer per group on the map side instead
+  * of that sort. Ordering is total (value desc, then id asc) so results
+  * are deterministic under ties.
   */
 object TopKAggregator {
 

@@ -313,8 +313,9 @@ object AdvancedQueries {
     * custom-UDAF surface) — exposed as a checked catalog query, not
     * just a spec: the aggregator keeps a bounded k-buffer per group on
     * the MAP side, so only k candidates per group per input partition
-    * cross the shuffle — the right trade at 100 TB where the window
-    * form (`row_number().over(...)`) shuffles every row. Ordering is
+    * cross the shuffle. The window form (`row_number().over(...)`)
+    * ships no more: Spark 4.1 plans a Partial `WindowGroupLimit` before
+    * its exchange, after a full map-side sort. Ordering is
     * total (value desc, id asc), so the result is deterministic under
     * ties and equals the window-form oracle exactly. n_chars survives
     * the double round-trip exactly (all values ≪ 2⁵³). */

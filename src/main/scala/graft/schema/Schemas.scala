@@ -149,11 +149,13 @@ object Schemas {
     }
   }
 
-  /** Validated read of an erathia bronze/staged table (partitioned dirs
-    * keep the discovered partition columns, so the read schema is the
-    * inferred one — validation still gates it). */
+  /** Validated read of an erathia bronze/staged table. The scan takes the
+    * declared schema (no inference job); each declaration lists its
+    * columns in the order the files carry them, partition columns
+    * (fact_sales' year/month) last, so the frame's schema is the one
+    * inference would give. */
   def readErathia(s: SparkSession, path: String, name: String): DataFrame = {
     validateOnce(s, path, name, erathia(name))
-    s.read.parquet(path)
+    s.read.schema(erathia(name)).parquet(path)
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.erathia.{DataGen, Gold, Silver, Viewer}
@@ -197,6 +201,86 @@ class ErathiaSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val ing = c.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(gen == ing, "ingested keys must align with generated namespace")
+  }
+
+  /** Spark jobs started by `body`. The listener tags each job start with
+    * a local property; a marker job after `body` shows every earlier
+    * start was delivered (the listener bus delivers in order). */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "erathia.spec.probe"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).map(_.getProperty(key, "")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      try body finally sc.setLocalProperty(key, "end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains("end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("end"), "marker job start never delivered")
+      seen.toArray.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
+    df.collect() // the final adaptive plan
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+  }
+
+  test("silver view registration starts no Spark job") {
+    dir
+    assert(jobsStartedBy(Silver.registerFromDisk(spark, s"$dir/silver")) == 0)
+  }
+
+  test("gold view registration starts no Spark job") {
+    dir
+    Gold.marts.keys.foreach { m =>
+      val schema = spark.table(m).schema
+      assert(jobsStartedBy(Gold.register(spark, s"$dir/gold", m, schema)) == 0, m)
+    }
+  }
+
+  test("listing the marts starts no Spark job") {
+    dir
+    assert(jobsStartedBy(Viewer.listMarts(spark)) == 0)
+  }
+
+  test("viewer sorts its bounded outputs with no shuffle") {
+    dir
+    assert(shuffles(Viewer.resourceNames(spark)).isEmpty)
+    Viewer.resourceNames(spark).collect().map(_.getString(0)).foreach { r =>
+      assert(shuffles(Viewer.priceDrilldown(spark, r)).isEmpty, r)
+    }
+  }
+
+  test("silver and gold views carry the schema inference gives their files") {
+    dir
+    val views = (Silver.dims :+ "fact_sales").map(t => t -> s"$dir/silver/$t") ++
+      Gold.marts.keys.map(m => m -> s"$dir/gold/$m")
+    views.foreach { case (view, path) =>
+      assert(spark.table(view).schema == spark.read.parquet(path).schema, view)
+    }
+  }
+
+  test("drill-downs equal the composed filter-then-orderBy, row for row") {
+    dir
+    val names = Viewer.resourceNames(spark).collect().map(_.getString(0))
+    assert(names.length == 12)
+    names.foreach { r =>
+      val composed = spark.table("dm_resource_price_history")
+        .filter(col("Resource Name") === r).orderBy("Year", "Month")
+      val got = Viewer.priceDrilldown(spark, r).collect()
+      assert(got.nonEmpty && got.sameElements(composed.collect()), r)
+    }
   }
 
   test("viewer drill-down filters one resource chronologically") {
