@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Shared machinery for STAGED DERIVED ASSETS — the offline indexes
   * (BandIndex, PostingIndex, IvfIndex, SemDedupIndex) and the
@@ -35,6 +36,14 @@ import org.apache.spark.sql.SparkSession
   *      byte-equivalent (the key pins corpus + parameters + layout),
   *      so the loser deletes its tmp and proceeds — unless no complete
   *      asset exists, which is a real failure and throws.
+  *   4. **Reads pass the memoized schema**: a published table is read
+  *      through [[read]], which infers its schema once per JVM and
+  *      passes it on every later read, so a probe's construction starts
+  *      no inference job. Sound by rules 1–3: a published path is
+  *      content-addressed and never rewritten in place, so any change
+  *      to a staged table's schema bumps the layout version and moves
+  *      the path. `tmp-<uuid>` build paths are never memoized; a build
+  *      reads its own output back with the schema of the frame it wrote.
   */
 object StagedAsset {
 
@@ -137,6 +146,21 @@ object StagedAsset {
       }
     } catch { case _: java.io.IOException => () }
   }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Read the published staged table at `path` (rule 4 above). */
+  def read(s: SparkSession, path: String): DataFrame =
+    if (path.contains(".tmp-")) s.read.parquet(path)
+    else {
+      val schema = Option(schemas.get(path)).getOrElse {
+        val inferred = s.read.parquet(path).schema
+        schemas.putIfAbsent(path, inferred)
+        inferred
+      }
+      s.read.schema(schema).parquet(path)
+    }
 
   /** Build-if-absent: returns `out`, invoking `build` only when the
     * completeness marker is missing. `build` must end in [[publish]]. */

@@ -1,6 +1,6 @@
 package graft.erathia
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{BooleanType, StructType}
@@ -58,7 +58,10 @@ object Silver {
     // declared schema (schema.Schemas.erathia) and fails fast on drift.
     val fact = cleanFact(
       Schemas.readErathia(s, s"$bronzeDir/fact_sales", "fact_sales"))
-    fact.write.mode("overwrite").partitionBy("year", "month")
+    // the fact write counts its own rows: no read-back count job
+    val written = Observation("silver_fact_rows")
+    fact.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").partitionBy("year", "month")
       .parquet(s"$silverDir/fact_sales")
 
     dims.foreach { d =>
@@ -70,7 +73,7 @@ object Silver {
     }
 
     registerFromDisk(s, silverDir)
-    s.table("fact_sales").count()
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Schema of silver table `t`: cleaning and dedup keep the bronze

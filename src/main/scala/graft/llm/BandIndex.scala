@@ -148,7 +148,7 @@ object BandIndex {
     * enough to broadcast for most corpora, refreshed per corpus
     * version by the cache key. */
   def digestTable(s: SparkSession, dir: String, boundary: Boundary): DataFrame =
-    s.read.parquet(s"${ensure(s, dir, boundary)}/digests")
+    graft.StagedAsset.read(s, s"${ensure(s, dir, boundary)}/digests")
 
   /** Build-if-absent, keyed by (corpus version, boundary, band shape). */
   def ensure(s: SparkSession, dir: String, boundary: Boundary): String =

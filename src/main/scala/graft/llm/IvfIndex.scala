@@ -110,5 +110,5 @@ object IvfIndex {
 
   /** The inverted lists of the (built-if-needed) index. */
   def lists(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/lists")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/lists")
 }

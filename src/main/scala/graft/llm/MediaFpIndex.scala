@@ -70,11 +70,11 @@ object MediaFpIndex {
 
   /** The staged base-side (doc_id, fp) frame (build-if-absent). */
   def fps(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/fps")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/fps")
 
   /** The staged base-side AUDIO (doc_id, fp) frame (build-if-absent) —
     * the q197 / streaming-audio-maintainer base. */
   def audioFps(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(
+    graft.StagedAsset.read(s,
       s"${ensureKind(s, dir, "audiofp", MultimodalOps.audioFps)}/fps")
 }

@@ -131,13 +131,13 @@ object NearDupOps {
     * (q43/q49/q62/q65/q75/q85) shares ONE staged collapse + banding per
     * corpus version instead of recomputing both per query. */
   private final case class StagedCorpus(s: SparkSession, idx: String) {
-    def digests: DataFrame = s.read.parquet(s"$idx/digests")
-    def dups: DataFrame = s.read.parquet(s"$idx/dups")
-    def bands: DataFrame = s.read.parquet(s"$idx/bands")
+    def digests: DataFrame = graft.StagedAsset.read(s, s"$idx/digests")
+    def dups: DataFrame = graft.StagedAsset.read(s, s"$idx/dups")
+    def bands: DataFrame = graft.StagedAsset.read(s, s"$idx/bands")
     /** Packed TF-hyperplane probe codes per shingleable rep — the
       * staged side of the doc-embed path (q49); its band explosion is
       * derived in-plan by the probe. */
-    def tfcodes: DataFrame = s.read.parquet(s"$idx/tfcodes")
+    def tfcodes: DataFrame = graft.StagedAsset.read(s, s"$idx/tfcodes")
     /** (rep_id, n_sh) for multi-member groups whose text shingles —
       * the stat every intra-group jaccard-1 pair carries. Derived from
       * the staged digest directory (n_sh > 0 ⇔ ≥ 3 tokens, the

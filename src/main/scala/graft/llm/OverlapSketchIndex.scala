@@ -58,5 +58,5 @@ object OverlapSketchIndex {
 
   /** The staged corpus-side sketch frame (build-if-absent). */
   def sketch(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/sketch")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/sketch")
 }

@@ -59,5 +59,5 @@ object ParaDigestIndex {
 
   /** The staged corpus-side digest frame (build-if-absent). */
   def dgs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/dgs")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/dgs")
 }

@@ -87,9 +87,10 @@ object PostingIndex {
     def wr(df: org.apache.spark.sql.DataFrame, path: String): Unit =
       (if (tfEmpty) df.repartition(1) else df)
         .write.mode("overwrite").parquet(path)
-    wr(tf.groupBy("doc_id").agg(sum(col("tf")).as("dl")), s"$tmp/doclen")
+    val doclen = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+    wr(doclen, s"$tmp/doclen")
     wr(tf.groupBy("term").agg(count(lit(1)).as("df")), s"$tmp/df")
-    s.read.parquet(s"$tmp/doclen")
+    s.read.schema(doclen.schema).parquet(s"$tmp/doclen")
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
       .write.mode("overwrite").parquet(s"$tmp/stats")
     graft.StagedAsset.publish(s, tmp, idx, "stats/_SUCCESS",

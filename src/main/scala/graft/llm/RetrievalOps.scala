@@ -41,7 +41,9 @@ object RetrievalOps {
     * joins (AQE broadcasts the pruned sides — the q80 posture, no
     * unconditional broadcast of a vocabulary-sized frame); corpus
     * scalars (N, Σdl) are a broadcast 1-row frame; top-10 per query
-    * plans as a rank-window over the per-query partition. */
+    * plans as a rank-window over the per-query partition. The output is
+    * at most 10 × |query ids| rows, so its final sort runs in one
+    * partition (no range exchange, no sampling job). */
   /** The shared BM25 scoring tail: identical expression tree for the
     * in-query (q125) and staged-index (q130) paths by construction.
     * `tf` may be pre-pruned to the query terms; `dfQ` must be pruned
@@ -68,6 +70,7 @@ object RetrievalOps {
       .filter(col("rank") <= 10)
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("n_terms_hit"), col("s").cast("double").as("score"))
+      .repartition(1)
       .orderBy("query_id", "rank")
   }
 
@@ -100,13 +103,13 @@ object RetrievalOps {
     val idx = PostingIndex.ensure(s, dir)
     val terms = QueryTerms.map(_._2).distinct
     val buckets = terms.map(PostingIndex.bucketOf).distinct
-    val tf = s.read.parquet(s"$idx/postings")
+    val tf = graft.StagedAsset.read(s, s"$idx/postings")
       .filter(col("pbucket").isin(buckets: _*) && col("term").isin(terms: _*))
       .select("doc_id", "term", "tf")
-    val dl = s.read.parquet(s"$idx/doclen")
-    val dfQ = s.read.parquet(s"$idx/df")
+    val dl = graft.StagedAsset.read(s, s"$idx/doclen")
+    val dfQ = graft.StagedAsset.read(s, s"$idx/df")
       .filter(col("term").isin(terms: _*))
-    val stats = s.read.parquet(s"$idx/stats")
+    val stats = graft.StagedAsset.read(s, s"$idx/stats")
     bm25Score(tf, dl, dfQ, stats, QueryTerms.toDF("query_id", "term"))
   }
 
@@ -134,20 +137,20 @@ object RetrievalOps {
         .select(col("doc_id"),
           explode(graft.functions.Tokenize.tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
-    val tf = s.read.parquet(s"$idx/postings")
+    val tf = graft.StagedAsset.read(s, s"$idx/postings")
       .filter(col("pbucket").isin(buckets: _*) && col("term").isin(terms: _*))
       .select("doc_id", "term", "tf")
       .unionByName(batchTf.filter(col("term").isin(terms: _*)))
-    val dl = s.read.parquet(s"$idx/doclen")
+    val dl = graft.StagedAsset.read(s, s"$idx/doclen")
       .unionByName(batchTf.groupBy("doc_id").agg(sum(col("tf")).as("dl")))
-    val dfQ = s.read.parquet(s"$idx/df")
+    val dfQ = graft.StagedAsset.read(s, s"$idx/df")
       .filter(col("term").isin(terms: _*))
       .unionByName(batchTf.filter(col("term").isin(terms: _*))
         .groupBy("term").agg(count(lit(1)).as("df")))
       .groupBy("term").agg(sum(col("df")).as("df"))
     val batchStats = batchTf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
       .agg(count(lit(1)).as("bn"), coalesce(sum(col("dl")), lit(0L)).as("bt"))
-    val stats = s.read.parquet(s"$idx/stats")
+    val stats = graft.StagedAsset.read(s, s"$idx/stats")
       .crossJoin(broadcast(batchStats))
       .select((col("n_docs") + col("bn")).as("n_docs"),
         (col("tot") + col("bt")).as("tot"))

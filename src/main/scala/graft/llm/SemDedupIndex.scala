@@ -92,10 +92,10 @@ object SemDedupIndex {
 
   /** The staged component partition as a DataFrame (build-if-absent). */
   def components(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/components")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/components")
 
   /** The staged prepared corpus side (label, vec_id, v, norm) — the
     * probe's join side, norms precomputed at build time. */
   def corpus(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/corpus")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/corpus")
 }

@@ -83,7 +83,7 @@ object SpanDigestIndex {
     dgn.write.mode("overwrite").parquet(s"$tmp/dgn")
     // re-derive runs READING the written dgn (one gram agg, not two)
     val (_, runs, _) = frames(base, K,
-      dgnStaged = Some(s.read.parquet(s"$tmp/dgn")))
+      dgnStaged = Some(s.read.schema(dgn.schema).parquet(s"$tmp/dgn")))
     runs.write.mode("overwrite").parquet(s"$tmp/runs")
     totals.write.mode("overwrite").parquet(s"$tmp/totals")
     graft.StagedAsset.publish(s, tmp, idx, "totals/_SUCCESS",
@@ -98,9 +98,9 @@ object SpanDigestIndex {
     }
 
   def dgn(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/dgn")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/dgn")
   def runs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/runs")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/runs")
   def totals(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/totals")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/totals")
 }

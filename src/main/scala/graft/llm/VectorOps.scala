@@ -33,7 +33,13 @@ object VectorOps {
     * pair from precomputed norms, then top-10 per query with vec_id
     * tie-break. One definition so the three ANN variants (brute, LSH,
     * IVF) cannot drift in rounding or tie-break semantics. Input needs
-    * columns (query_id, vec_id, qv, v, qnorm, norm). */
+    * columns (query_id, vec_id, qv, v, qnorm, norm).
+    *
+    * Plan shape at 100 TB: every caller broadcasts its query side, so
+    * the output is at most 10 × that broadcast frame's rows and the
+    * final sort runs in one partition (no range exchange, no sampling
+    * job); `repartition(1)`, not `coalesce(1)`, keeps the window stage
+    * spread over the corpus-sized map tasks. */
   private[graft] def rankTop10(pairs: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.dot_product
     val sims = pairs.select(col("query_id"), col("vec_id"),
@@ -43,6 +49,7 @@ object VectorOps {
       .orderBy(col("sim").desc, col("vec_id"))
     sims.withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 10)
+      .repartition(1)
       .orderBy("query_id", "rn")
   }
 
@@ -475,8 +482,8 @@ object VectorOps {
     * force) remains q67. */
   def ivfPlantedRecall(s: SparkSession, dir: String): DataFrame = {
     val idx = IvfIndex.ensure(s, dir)
-    val lists = s.read.parquet(s"$idx/lists")
-    val centroids = s.read.parquet(s"$idx/centroids")
+    val lists = graft.StagedAsset.read(s, s"$idx/lists")
+    val centroids = graft.StagedAsset.read(s, s"$idx/centroids")
     val twins = lists.filter(col("vec_id") < 25)
       .select((col("vec_id") + lit(1000000L)).as("vec_id"),
         col("v"), col("norm"))
@@ -508,8 +515,8 @@ object VectorOps {
     * (spec-pinned), recall monotonicity pinned against brute force. */
   def ivfTopKMultiProbe(s: SparkSession, dir: String, nprobe: Int = 2): DataFrame = {
     val idx = IvfIndex.ensure(s, dir)
-    val lists = s.read.parquet(s"$idx/lists")
-    val centroids = s.read.parquet(s"$idx/centroids")
+    val lists = graft.StagedAsset.read(s, s"$idx/lists")
+    val centroids = graft.StagedAsset.read(s, s"$idx/centroids")
     val q = lists.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm").as("qnorm"))
@@ -532,8 +539,8 @@ object VectorOps {
     * subset probe. */
   def ivfFullProbe(s: SparkSession, dir: String): DataFrame = {
     val idx = IvfIndex.ensure(s, dir)
-    val lists = s.read.parquet(s"$idx/lists")
-    val cells = s.read.parquet(s"$idx/centroids").select(col("cell"))
+    val lists = graft.StagedAsset.read(s, s"$idx/lists")
+    val cells = graft.StagedAsset.read(s, s"$idx/centroids").select(col("cell"))
     val q = lists.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm").as("qnorm"))
@@ -562,8 +569,8 @@ object VectorOps {
   def ivfAddBatch(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.dot_product
     val idx = IvfIndex.ensure(s, dir)
-    val lists = s.read.parquet(s"$idx/lists")
-    val centroids = s.read.parquet(s"$idx/centroids")
+    val lists = graft.StagedAsset.read(s, s"$idx/lists")
+    val centroids = graft.StagedAsset.read(s, s"$idx/centroids")
     val isNew = pmod(col("vec_id"), lit(10)) === 7
     val staged = lists.filter(!isNew).select("vec_id", "cell", "v", "norm")
     val batch = t(s, dir, "embeddings").filter(isNew)
@@ -589,7 +596,7 @@ object VectorOps {
   private[graft] def ivfAddAssignments(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.dot_product
     val idx = IvfIndex.ensure(s, dir)
-    val centroids = s.read.parquet(s"$idx/centroids")
+    val centroids = graft.StagedAsset.read(s, s"$idx/centroids")
     val isNew = pmod(col("vec_id"), lit(10)) === 7
     val batch = t(s, dir, "embeddings").filter(isNew)
       .select(col("vec_id"), col("embedding").as("v"))

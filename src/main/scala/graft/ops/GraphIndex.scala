@@ -48,22 +48,22 @@ object GraphIndex {
   def build(s: SparkSession, dir: String): String = {
     val idx = indexDir(s, dir)
     val tmp = graft.StagedAsset.tmpDir(idx)
-    graft.Tables.t(s, dir, "lineitem")
+    // each table is read back with the schema of the frame that wrote
+    // it, so the read-back starts no inference job
+    def stage(df: DataFrame, table: String): DataFrame = {
+      df.write.mode("overwrite").parquet(s"$tmp/$table")
+      s.read.schema(df.schema).parquet(s"$tmp/$table")
+    }
+    val it = stage(graft.Tables.t(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
-      .repartition(col("o"))
-      .write.mode("overwrite").parquet(s"$tmp/incidence")
-    val it = s.read.parquet(s"$tmp/incidence")
-    it.as("a").join(it.as("b"),
+      .repartition(col("o")), "incidence")
+    val e = stage(it.as("a").join(it.as("b"),
         col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .select(col("a.p").as("u"), col("b.p").as("v"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$tmp/edges")
-    val e = s.read.parquet(s"$tmp/edges")
-    e.select(explode(array(col("u"), col("v"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-      .write.mode("overwrite").parquet(s"$tmp/degrees")
-    val deg = s.read.parquet(s"$tmp/degrees")
+      .distinct(), "edges")
+    val deg = stage(e.select(explode(array(col("u"), col("v"))).as("n"))
+      .groupBy("n").agg(count(lit(1)).as("deg")), "degrees")
     val uLower = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     e.join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
@@ -85,14 +85,14 @@ object GraphIndex {
     }
 
   def incidence(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/incidence")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/incidence")
 
   def edges(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/edges")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/edges")
 
   def degrees(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/degrees")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/degrees")
 
   def oriented(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/oriented")
+    graft.StagedAsset.read(s, s"${ensure(s, dir)}/oriented")
 }

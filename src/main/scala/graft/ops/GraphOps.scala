@@ -308,10 +308,12 @@ object GraphOps {
       .groupBy("band")
       .agg(count(lit(1)).as("n_parts"),
         min(col("deg")).as("min_deg"), max(col("deg")).as("max_deg"))
-    val tot = bands.agg(sum(col("n_parts")).as("n_nodes"))
-    val wc = Window.orderBy("band")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bands.crossJoin(broadcast(tot))
+    // n_nodes and cum_share share one unpartitioned band-ordered
+    // window: one pass over the |bands| rows, no aggregate to cross-join
+    val byBand = Window.orderBy("band")
+    val wc = byBand.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = byBand.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    bands.withColumn("n_nodes", sum(col("n_parts")).over(wAll))
       .withColumn("share",
         round(col("n_parts").cast("double") / col("n_nodes"), 6))
       .withColumn("cum_share",

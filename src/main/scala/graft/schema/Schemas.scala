@@ -21,8 +21,9 @@ class SchemaMismatchException(msg: String) extends RuntimeException(msg)
   *      declared `StructType`, so planning never depends on whatever a
   *      drifted writer put in the footer.
   *
-  * The validation itself reads only parquet footers (a metadata
-  * operation — no Spark job) and is cached per path for the session.
+  * The validation infers the file schema, which runs one Spark job
+  * (a parallel footer read) the first time a path is seen; it is then
+  * cached per path and file status for the session.
   */
 object Schemas {
 

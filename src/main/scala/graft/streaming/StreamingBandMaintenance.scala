@@ -148,13 +148,13 @@ object StreamingBandMaintenance {
     val dDigests = stable(ctx.earlier("digests"))
     val dDups = stable(ctx.earlier("dups"))
     val dBands = stable(ctx.earlier("bands"))
-    val corpusDigests = s.read.parquet(s"$baseIdx/digests")
+    val corpusDigests = graft.StagedAsset.read(s, s"$baseIdx/digests")
       .select("digest", "rep_id", "n_sh")
       .unionByName(dDigests)
-    val corpusDups = s.read.parquet(s"$baseIdx/dups")
+    val corpusDups = graft.StagedAsset.read(s, s"$baseIdx/dups")
       .select("rep_id", "doc_id")
       .unionByName(dDups)
-    val corpusBands = s.read.parquet(s"$baseIdx/bands")
+    val corpusBands = graft.StagedAsset.read(s, s"$baseIdx/bands")
       .select("band", "doc_id", "band_n", "hub_rank")
       .unionByName(dBands)
 
@@ -281,7 +281,7 @@ object StreamingBandMaintenance {
       .select(col("rep_id"), col("new_doc").as("doc_id"))
       .dropDuplicates("rep_id", "doc_id")
       .join(dDups.select("doc_id")
-          .unionByName(s.read.parquet(s"$baseIdx/dups").select("doc_id")),
+          .unionByName(graft.StagedAsset.read(s, s"$baseIdx/dups").select("doc_id")),
         Seq("doc_id"), "left_anti")
       .select("rep_id", "doc_id")
     val w = Window.partitionBy(col("band"))

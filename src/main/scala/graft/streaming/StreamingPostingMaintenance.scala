@@ -92,15 +92,15 @@ object StreamingPostingMaintenance {
     import graft.llm.RetrievalOps.QueryTerms
     val terms = QueryTerms.map(_._2).distinct
     val buckets = terms.map(graft.llm.PostingIndex.bucketOf).distinct
-    val tf = s.read.parquet(s"$baseIdx/postings")
+    val tf = graft.StagedAsset.read(s, s"$baseIdx/postings")
       .filter(col("pbucket").isin(buckets: _*) && col("term").isin(terms: _*))
       .select("doc_id", "term", "tf")
       .unionByName(deltaSeg(s, deltaDir, "postings")
         .filter(col("pbucket").isin(buckets: _*) && col("term").isin(terms: _*))
         .select("doc_id", "term", "tf"))
-    val dl = s.read.parquet(s"$baseIdx/doclen")
+    val dl = graft.StagedAsset.read(s, s"$baseIdx/doclen")
       .unionByName(deltaSeg(s, deltaDir, "doclen"))
-    val dfQ = s.read.parquet(s"$baseIdx/df")
+    val dfQ = graft.StagedAsset.read(s, s"$baseIdx/df")
       .filter(col("term").isin(terms: _*))
       .unionByName(deltaSeg(s, deltaDir, "df")
         .filter(col("term").isin(terms: _*)))
@@ -108,7 +108,7 @@ object StreamingPostingMaintenance {
     val deltaStats = deltaSeg(s, deltaDir, "stats")
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("dn"),
         coalesce(sum(col("tot")), lit(0L)).as("dt"))
-    val stats = s.read.parquet(s"$baseIdx/stats")
+    val stats = graft.StagedAsset.read(s, s"$baseIdx/stats")
       .crossJoin(broadcast(deltaStats))
       .select((col("n_docs") + col("dn")).as("n_docs"),
         (col("tot") + col("dt")).as("tot"))

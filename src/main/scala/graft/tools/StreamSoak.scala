@@ -145,7 +145,7 @@ object StreamSoak {
           delta, foldSegments) _
       case "ivf" =>
         val idx = graft.llm.IvfIndex.ensure(spark, sfDir)
-        val centroids = spark.read.parquet(s"$idx/centroids")
+        val centroids = graft.StagedAsset.read(spark, s"$idx/centroids")
         graft.streaming.StreamingIvfMaintenance.ivfMaintain(
           centroids, delta, foldSegments) _
       case "semdedup" =>

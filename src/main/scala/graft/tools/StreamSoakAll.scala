@@ -112,7 +112,7 @@ object StreamSoakAll {
       .select(col("doc_id"), col("text"))
       .unionByName(spark.range(IdOff, IdOff + TextPool)
         .select(col("id").as("doc_id"), synthText(col("id")).as("text")))
-    val centroids = spark.read.parquet(
+    val centroids = graft.StagedAsset.read(spark,
       s"${graft.llm.IvfIndex.ensure(spark, sfDir)}/centroids")
     graft.llm.SemDedupIndex.ensure(spark, sfDir)
     val sdBase = graft.llm.SemDedupIndex.corpus(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -60,6 +59,13 @@ class ErathiaSpec extends AnyFunSuite {
     assert(f.filter(col("quantity") === 0).count() == 0)
     val c = spark.table("dim_customer")
     assert(c.filter(col("is_hero") =!= (col("customer_segment") === "VIP")).count() == 0)
+  }
+
+  test("silver reports the fact rows it wrote") {
+    dir
+    val n = Silver.run(spark, s"$dir/bronze", s"$dir/silver-recount")
+    try assert(n > 0 && n == spark.read.parquet(s"$dir/silver-recount/fact_sales").count())
+    finally Silver.registerFromDisk(spark, s"$dir/silver")
   }
 
   test("silver dedup leaves unique keys per dim") {
@@ -203,32 +209,6 @@ class ErathiaSpec extends AnyFunSuite {
     assert(gen == ing, "ingested keys must align with generated namespace")
   }
 
-  /** Spark jobs started by `body`. The listener tags each job start with
-    * a local property; a marker job after `body` shows every earlier
-    * start was delivered (the listener bus delivers in order). */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "erathia.spec.probe"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).map(_.getProperty(key, "")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "body")
-      try body finally sc.setLocalProperty(key, "end")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains("end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("end"), "marker job start never delivered")
-      seen.toArray.count(_ == "body")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
     df.collect() // the final adaptive plan
     new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
@@ -238,20 +218,20 @@ class ErathiaSpec extends AnyFunSuite {
 
   test("silver view registration starts no Spark job") {
     dir
-    assert(jobsStartedBy(Silver.registerFromDisk(spark, s"$dir/silver")) == 0)
+    assert(JobProbe.jobsStartedBy(spark)(Silver.registerFromDisk(spark, s"$dir/silver")).isEmpty)
   }
 
   test("gold view registration starts no Spark job") {
     dir
     Gold.marts.keys.foreach { m =>
       val schema = spark.table(m).schema
-      assert(jobsStartedBy(Gold.register(spark, s"$dir/gold", m, schema)) == 0, m)
+      assert(JobProbe.jobsStartedBy(spark)(Gold.register(spark, s"$dir/gold", m, schema)).isEmpty, m)
     }
   }
 
   test("listing the marts starts no Spark job") {
     dir
-    assert(jobsStartedBy(Viewer.listMarts(spark)) == 0)
+    assert(JobProbe.jobsStartedBy(spark)(Viewer.listMarts(spark)).isEmpty)
   }
 
   test("viewer sorts its bounded outputs with no shuffle") {

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -135,5 +139,41 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"low-cardinality sort-windows over data-scaled frames:\n  " +
         offenders.mkString("\n  "))
+  }
+
+  // ---- bounded top-k tails sort in one partition ----------------------
+
+  /** Exchanges of `df`'s final adaptive plan, after running it. */
+  private def exchanges(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+      case b: BroadcastExchangeExec => b
+    }
+  }
+
+  private def isRangeExchange(p: SparkPlan): Boolean = p match {
+    case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+    case _ => false
+  }
+
+  test("users of the top-k and degree-profile tails plan no range exchange") {
+    val s = TestSpark.spark
+    val users = Seq("q40_cosine_topk", "q46_ann_topk", "q57_ivf_topk",
+      "q67_ivf_full_probe", "q86_ann_full_probe", "q106_ivf_add_batch",
+      "q125_bm25_search", "q130_bm25_staged", "q132_bm25_add_batch",
+      "q151_degree_profile", "q194_degree_add_batch")
+      .map(q => q -> SparkEntry.queries(q)(s, TestSpark.sfDir)) :+
+      ("ivf multi-probe" -> graft.llm.VectorOps.ivfTopKMultiProbe(s, TestSpark.sfDir, 2))
+    val ranged = users.collect {
+      case (q, df) if exchanges(df).exists(isRangeExchange) => q
+    }
+    assert(ranged.isEmpty, s"range exchanges in: $ranged")
+  }
+
+  test("q151's degree profile plans no broadcast") {
+    val q151 = exchanges(
+      SparkEntry.queries("q151_degree_profile")(TestSpark.spark, TestSpark.sfDir))
+    assert(!q151.exists(_.isInstanceOf[BroadcastExchangeExec]), q151)
   }
 }

@@ -106,4 +106,30 @@ class StagedAssetSpec extends AnyFunSuite {
       sys.error("build must not re-run for a complete asset"))
     assert(spark.read.parquet(s"$out/data").count() == 100)
   }
+
+  test("staged reads carry the schema inference gives every published table") {
+    val published = Seq(
+      graft.llm.IvfIndex.ensure(spark, sfDir),
+      graft.llm.PostingIndex.ensure(spark, sfDir),
+      graft.ops.GraphIndex.ensure(spark, sfDir),
+      graft.llm.BandIndex.ensure(spark, sfDir, graft.llm.BandIndex.Boundary.all))
+    published.foreach { idx =>
+      val tables = new java.io.File(idx).listFiles().filter(f =>
+        f.isDirectory && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      assert(tables.nonEmpty, idx)
+      tables.foreach { t =>
+        val path = s"$idx/${t.getName}"
+        StagedAsset.read(spark, path)
+        assert(StagedAsset.read(spark, path).schema == spark.read.parquet(path).schema, path)
+      }
+    }
+  }
+
+  test("build paths are read with their own schema, never a memoized one") {
+    val tmp = StagedAsset.tmpDir(freshOut())
+    spark.range(3).write.mode("overwrite").parquet(s"$tmp/t")
+    assert(StagedAsset.read(spark, s"$tmp/t").columns.toSeq == Seq("id"))
+    spark.range(3).select(col("id").as("other")).write.mode("overwrite").parquet(s"$tmp/t")
+    assert(StagedAsset.read(spark, s"$tmp/t").columns.toSeq == Seq("other"))
+  }
 }
