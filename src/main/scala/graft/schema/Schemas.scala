@@ -1,6 +1,6 @@
 package graft.schema
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Raised when a parquet input's footer schema drifts from the declared
@@ -140,14 +140,27 @@ object Schemas {
   }
 
   /** Footer-validate `path` against `declared` once per (path, file
-    * status) — re-validates automatically if the file changes. */
+    * status) — re-validates automatically if the file changes. A
+    * directory that holds no data files (what a partitionBy write of an
+    * empty frame leaves) has no schema to infer and cannot drift: it
+    * validates, and the declared-schema read returns the empty frame. */
   def validateOnce(s: SparkSession, path: String, name: String,
       declared: StructType): Unit = {
     val key = statusKey(s, path)
     if (!validatedPaths.contains(key)) {
-      validate(name, declared, s.read.parquet(path).schema)
+      try validate(name, declared, s.read.parquet(path).schema)
+      catch { case e: AnalysisException
+        if e.getCondition == "UNABLE_TO_INFER_SCHEMA" && !hasDataFiles(s, path) => }
       validatedPaths.add(key)
     }
+  }
+
+  /** Any file under `path` that a parquet scan would read. */
+  private def hasDataFiles(s: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath.getName)
+      .exists(n => !n.startsWith("_") && !n.startsWith("."))
   }
 
   /** Validated read of an erathia bronze/staged table. The scan takes the

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** THE streaming-maintainer skeleton, defined once for all ten families
+/** THE streaming-maintainer skeleton, defined once for all twelve families
   * (VERDICT r14 item 6 — previously ten near-isomorphic modules each
   * re-stated the same four obligations, and drift between copies is how
   * this family's bugs have historically happened: the digest family's

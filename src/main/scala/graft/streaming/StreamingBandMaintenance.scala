@@ -258,7 +258,7 @@ object StreamingBandMaintenance {
 
     // 5. grow the delta: first-seen groups' (digests, dups, bands),
     // plus matched docs as new members of their existing groups.
-    // Member-gain hygiene (round 15, found by StreamSoakAll's uniform
+    // Member-gain hygiene (round 15, found by StreamSoak's uniform
     // DONE-probe): a RE-DELIVERED doc matches its own group, and the
     // unfiltered form appended a degenerate (rep=X, doc=X) self-row on
     // EVERY re-arrival — state growing with deliveries, not distinct

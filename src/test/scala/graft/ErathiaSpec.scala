@@ -68,6 +68,25 @@ class ErathiaSpec extends AnyFunSuite {
     finally Silver.registerFromDisk(spark, s"$dir/silver")
   }
 
+  test("silver over an empty bronze fact returns 0 and registers the declared fact") {
+    dir
+    val e = java.nio.file.Files.createTempDirectory("erathia-empty").toString
+    Silver.dims.foreach { d =>
+      spark.read.parquet(s"$dir/bronze/$d").write.parquet(s"$e/bronze/$d") }
+    // a partitionBy write of an empty frame leaves a directory with no
+    // data files, only the commit marker
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        graft.schema.Schemas.erathia("fact_sales"))
+      .write.partitionBy("year", "month").parquet(s"$e/bronze/fact_sales")
+    try {
+      assert(Silver.run(spark, s"$e/bronze", s"$e/silver") == 0L)
+      val fact = spark.table("fact_sales")
+      assert(fact.schema.map(f => f.name -> f.dataType) ==
+        Silver.schema("fact_sales").map(f => f.name -> f.dataType))
+      assert(fact.count() == 0)
+    } finally Silver.registerFromDisk(spark, s"$dir/silver")
+  }
+
   test("silver dedup leaves unique keys per dim") {
     dir
     Silver.dims.foreach { d =>
