@@ -23,12 +23,16 @@ object SimplifySelfCosine extends Rule[LogicalPlan] {
 /** SparkSessionExtensions installer: registers the native kernels as SQL
   * functions for any session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`). This is the deployment path
-  * for a cluster: users get `cosine_sim`, `dot_product`, `self_cosine`,
-  * `hyperplane_bucket`, `shingle_minhash`, `simhash64`, `simhash_md5`,
-  * `winnow_fingerprint`, `winnow_fingerprint_md5`, and
-  * `hashed_tf_vector` in plain SQL with full codegen, plus the
-  * SimplifySelfCosine optimizer rule.
+  * `.withExtensions(new GraftExtensions)`). This is the one SQL
+  * registration path, for a cluster and for the test session alike.
+  * Users get 17 functions in plain SQL: the 15 kernels `cosine_sim`,
+  * `dot_product`, `self_cosine`, `hyperplane_bucket`,
+  * `hyperplane_codes`, `code_agreement`, `shingle_minhash`,
+  * `shingle_array`, `shingle_tf_vector`, `hashed_tf_vector`,
+  * `simhash64`, `simhash_md5`, `winnow_fingerprint`,
+  * `winnow_fingerprint_md5` and `z_order16`, all with full codegen, and
+  * Spark's Bloom-sketch pair `bloom_filter_agg` and `might_contain`.
+  * It also installs the SimplifySelfCosine optimizer rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

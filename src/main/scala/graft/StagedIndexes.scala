@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The staged offline indexes the catalog probes, in build order — the
-  * one list every harness warmup (Bench, tools.ABConf,
-  * tools.StageProfile) stages before its timed spans. Each `ensure` is
-  * build-if-absent, so a warm cache makes this a sequence of marker
-  * checks. */
+  * one list every harness warmup (Bench, tools.StageProfile) stages
+  * before its timed spans. Each `ensure` is build-if-absent, so a warm
+  * cache makes this a sequence of marker checks. */
 object StagedIndexes {
   val all: Seq[(String, (SparkSession, String) => String)] = Seq(
     "ivf" -> ((s, d) => llm.IvfIndex.ensure(s, d)),

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -478,12 +478,4 @@ object VectorFunctions {
   def code_agreement(a: Column, b: Column, bits: Int): Column =
     GraftSqlBridge.column(CodeAgreement(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b), bits))
-
-  /** SQL registration: SELECT cosine_sim(v1, v2), dot_product(v1, v2). */
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-  }
 }

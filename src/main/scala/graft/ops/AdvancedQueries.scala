@@ -308,37 +308,21 @@ object AdvancedQueries {
       .orderBy("event_type")
   }
 
-  /** Per-source top-3 documents by length through the typed
-    * [[graft.functions.TopKAggregator]] (Dataset `Aggregator`, §2.9's
-    * custom-UDAF surface) — exposed as a checked catalog query, not
-    * just a spec: the aggregator keeps a bounded k-buffer per group on
-    * the MAP side, so only k candidates per group per input partition
-    * cross the shuffle. The window form (`row_number().over(...)`)
-    * ships no more: Spark 4.1 plans a Partial `WindowGroupLimit` before
-    * its exchange, after a full map-side sort. Ordering is
-    * total (value desc, id asc), so the result is deterministic under
-    * ties and equals the window-form oracle exactly. n_chars survives
-    * the double round-trip exactly (all values ≪ 2⁵³). */
+  /** Per-source top-3 documents by length. Total order (n_chars desc,
+    * doc_id asc), so ties resolve the same on every run and in the
+    * DuckDB oracle. Spark plans the `rank <= 3` filter with a Partial
+    * `WindowGroupLimit` before the exchange and a Final one after it:
+    * each map task ships at most 3 rows per source (PlanAuditSpec's
+    * group-limit gate holds that). A NULL measure cannot rank and is
+    * excluded, as the oracle's WHERE does. */
   def topKBySource(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.TopKAggregator
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("n_chars").desc, col("doc_id"))
     t(s, dir, "documents")
-      .select(col("source"), col("doc_id"), col("n_chars"))
-      // A NULL measure cannot rank (and would NOT_NULL-violate the
-      // tuple encoder's primitive Long) — exclude it, exactly as the
-      // window-form oracle's ORDER BY excludes it from any top-k with
-      // k non-null candidates.
       .filter(col("n_chars").isNotNull)
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, id, nc) => TopKAggregator.Entry(id, nc.toDouble) }
-      .agg(TopKAggregator(3).toColumn)
-      .flatMap { case (src, entries) =>
-        entries.zipWithIndex.map { case (e, i) =>
-          (src, (i + 1).toLong, e.id, e.value.toLong)
-        }
-      }
-      .toDF("source", "rank", "doc_id", "n_chars")
+      .select(col("source"), row_number().over(w).cast("long").as("rank"),
+        col("doc_id"), col("n_chars"))
+      .filter(col("rank") <= 3)
       .orderBy("source", "rank")
   }
 

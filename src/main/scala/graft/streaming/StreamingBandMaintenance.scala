@@ -81,9 +81,6 @@ object StreamingBandMaintenance {
       StructField("hub_rank", LongType)))
   }
 
-  private def emptyOf(s: SparkSession, schema: StructType): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   /** One delta sub-table (digests/dups/bands) across all landed
     * batches — the probe-time read; the maintain path reads
     * strictly-before state through the harness. */

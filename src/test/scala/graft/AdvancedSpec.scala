@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.AdvancedQueries
@@ -72,5 +73,48 @@ class AdvancedSpec extends AnyFunSuite {
     assert(approx.getAs[Long]("n_rows") == exact.getAs[Long]("n_rows"))
     for (flag <- Seq("orders_ok", "parts_ok", "suppliers_ok", "p50_ok", "p99_ok"))
       assert(approx.getAs[Long](flag) == 1L, s"accuracy flag $flag failed")
+  }
+
+  /** The per-source top-3 composed on the driver: every non-null
+    * document of a source, sorted (n_chars desc, doc_id asc), first 3. */
+  private def composedTop3(docs: DataFrame): Seq[(String, Long, Long, Long)] =
+    docs.select("source", "doc_id", "n_chars").collect().toSeq
+      .filter(r => !r.isNullAt(2))
+      .groupBy(_.getString(0)).toSeq.sortBy(_._1)
+      .flatMap { case (src, rows) =>
+        rows.map(r => (r.getLong(1), r.getLong(2)))
+          .sortBy { case (id, n) => (-n, id) }.take(3).zipWithIndex
+          .map { case ((id, n), i) => (src, i + 1L, id, n) }
+      }
+
+  private def rowsOf(df: DataFrame): Seq[(String, Long, Long, Long)] =
+    df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+
+  test("q119 top-3 per source: ties break by doc_id, a null never ranks, a short source keeps what it has") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("topk").toString
+    // a: a tie at 200 inside the top 3 and a tie at 100 across its
+    // boundary; b: one ranked doc beside a null; c: only a null;
+    // d: four docs all tied.
+    val docs = Seq[(Long, String, Option[Long])](
+      (1, "a", Some(100)), (2, "a", Some(200)), (3, "a", Some(200)),
+      (4, "a", Some(100)), (5, "a", None), (6, "a", Some(50)),
+      (10, "b", Some(5)), (11, "b", None), (12, "c", None),
+      (23, "d", Some(7)), (21, "d", Some(7)), (22, "d", Some(7)), (20, "d", Some(7)))
+      .map { case (id, src, n) => (id, s"text $id", "en", src, n) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    val got = rowsOf(AdvancedQueries.topKBySource(spark, d))
+    assert(got == Seq(
+      ("a", 1L, 2L, 200L), ("a", 2L, 3L, 200L), ("a", 3L, 1L, 100L),
+      ("b", 1L, 10L, 5L),
+      ("d", 1L, 20L, 7L), ("d", 2L, 21L, 7L), ("d", 3L, 22L, 7L)))
+    assert(got == composedTop3(docs))
+  }
+
+  test("q119 equals the composed per-source top-3 on the fixture corpus, in order") {
+    val got = rowsOf(AdvancedQueries.topKBySource(spark, sfDir))
+    assert(got.nonEmpty)
+    assert(got == composedTop3(Tables.t(spark, sfDir, "documents")))
   }
 }

@@ -14,8 +14,8 @@ import graft.llm.{NearDupOps, VectorOps}
   * the brute-force thresholded pair set at every CI run and diffs it
   * against the pipelines pair-by-pair, so a fixture change fails HERE
   * with named pairs and their exact similarities, before the oracle
-  * run. (sf0.1 is covered by the same check run from tools/ScaleSoak;
-  * CI keeps to sf0.001 + sf0.01 — the driver's oracle scale.)
+  * run. It runs at sf0.001 and sf0.01, the scales the DuckDB oracle
+  * checks; no tool repeats it at sf0.1.
   */
 class DifferentialGateSpec extends AnyFunSuite {
   import TestSpark._

@@ -1,24 +1,22 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Cast,
+  DenseRank, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual,
+  LambdaFunction, LessThan, LessThanOrEqual, Literal, Rank, RowNumber, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards for the physical-plan surface.
+/** Guards for the physical-plan surface. Every catalog query is planned
+  * once (AQE off, sf0.001 fixtures) and three facts are read off its
+  * executed plan; each has a gate below.
   *
-  * 1. `docs/PLANS.txt` (regenerated via `sbt "runMain
-  *    graft.tools.ExplainAudit" > docs/PLANS.txt`) must hold a captured
-  *    plan for EVERY key in SparkEntry.queries. Round 3 shipped two
-  *    queries whose plans were never captured because nothing asserted
-  *    the artifact tracks the catalog — this spec makes that drift a
-  *    test failure instead of a silent gap.
-  *
-  * 2. No low-cardinality sort-window over a data-scaled frame: a
+  * 1. No low-cardinality sort-window over a data-scaled frame: a
   *    `Window.partitionBy(k)` where k has a handful of values and the
   *    input scales with the corpus funnels ~|corpus|/|k| rows through
   *    single sort tasks — fine at sf0.01, a straggler/OOM at 100×. The
@@ -31,19 +29,25 @@ import org.scalatest.funsuite.AnyFunSuite
   *    which is how q150/q157 (per-priority windows over per-(priority,
   *    day) aggregates) and the GraphOps degree-band windows are
   *    classified: bounded inputs, not violations.
+  *
+  * 2. Every top-k filter plans Spark's window group limit: a `Filter`
+  *    whose top-level conjunct bounds a `row_number`/`rank`/`dense_rank`
+  *    output by a literal must find a `WindowGroupLimit` under that
+  *    window (Partial before the exchange, Final after it), so each map
+  *    task ships at most k rows per group. A projection, sort or
+  *    non-expanding window function slipped between the rank and its
+  *    filter stops Spark from inferring the limit and fails here. A
+  *    disjunction (q48/q49's `hub_rank <= StarHubs OR band_n <=
+  *    SaturatedBand`) is not a limit and is not checked.
+  *
+  * 3. Interpreted lambdas: a higher-order function (`transform`,
+  *    `aggregate`, `filter`, …) runs its `LambdaFunction` interpreted
+  *    per row, outside whole-stage codegen. Each query's count of
+  *    lambda nodes equals an allowlist of bounded sites, so a new one
+  *    on a frame that grows with the data fails the build until it is
+  *    replaced by a fused kernel or allowlisted with a reason.
   */
 class PlanAuditSpec extends AnyFunSuite {
-
-  test("docs/PLANS.txt holds a plan for every query in the catalog") {
-    val path = java.nio.file.Paths.get("docs/PLANS.txt")
-    assert(java.nio.file.Files.exists(path), "docs/PLANS.txt missing")
-    val text = java.nio.file.Files.readString(path)
-    val missing = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(n => text.contains(s"===================== $n ====================="))
-    assert(missing.isEmpty,
-      s"docs/PLANS.txt lags the query catalog — regenerate with " +
-        s"`sbt \"runMain graft.tools.ExplainAudit\" > docs/PLANS.txt`; missing: $missing")
-  }
 
   // ---- window-over-scaled-frame invariant ------------------------------
 
@@ -128,17 +132,156 @@ class PlanAuditSpec extends AnyFunSuite {
       "auditor flagged a calendar-bounded window")
   }
 
-  test("window audit: no catalog query carries a low-cardinality window over a data-scaled frame") {
+  // ---- top-k filters plan a window group limit --------------------------
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(a, b) => conjuncts(a) ++ conjuncts(b)
+    case other => Seq(other)
+  }
+
+  /** The attribute a comparison bounds from above by a literal: the
+    * shapes Spark's `InferWindowGroupLimit` reads as a limit (`<`, `<=`,
+    * `=`, either side), seen through casts. */
+  private def literalBound(e: Expression): Option[ExprId] = {
+    def attr(x: Expression): Option[ExprId] = x match {
+      case a: Attribute => Some(a.exprId)
+      case c: Cast => attr(c.child)
+      case _ => None
+    }
+    e match {
+      case LessThanOrEqual(x, _: Literal) => attr(x)
+      case LessThan(x, _: Literal) => attr(x)
+      case GreaterThanOrEqual(_: Literal, x) => attr(x)
+      case GreaterThan(_: Literal, x) => attr(x)
+      case EqualTo(x, _: Literal) => attr(x)
+      case EqualTo(_: Literal, x) => attr(x)
+      case _ => None
+    }
+  }
+
+  /** Each window under a filter whose top-level conjunct bounds one of
+    * the window's row_number/rank/dense_rank outputs by a literal. */
+  private[graft] def topKWindows(plan: SparkPlan): Seq[WindowExec] =
+    plan.collectWithSubqueries { case f: FilterExec => f }.flatMap { f =>
+      val bounded = conjuncts(f.condition).flatMap(literalBound).toSet
+      f.collect {
+        case w: WindowExec if w.windowExpression.exists {
+          case a @ Alias(WindowExpression(_: RowNumber | _: Rank | _: DenseRank, _), _) =>
+            bounded.contains(a.exprId)
+          case _ => false
+        } => w
+      }
+    }
+
+  /** Does a WindowGroupLimit on the window's own partition and order
+    * keys run under it? */
+  private def hasGroupLimit(w: WindowExec): Boolean = {
+    def same(a: Seq[Expression], b: Seq[Expression]) =
+      a.map(_.canonicalized) == b.map(_.canonicalized)
+    w.child.exists {
+      case g: WindowGroupLimitExec =>
+        same(g.partitionSpec, w.partitionSpec) && same(g.orderSpec, w.orderSpec)
+      case _ => false
+    }
+  }
+
+  private[graft] def missingGroupLimits(plan: SparkPlan): Seq[String] =
+    topKWindows(plan).filterNot(hasGroupLimit).map(w =>
+      s"top-k filter over Window(${w.windowExpression.map(_.name).mkString(",")}) " +
+        "plans no WindowGroupLimit")
+
+  // ---- interpreted lambdas --------------------------------------------
+
+  private def countLambdas(e: Expression): Int =
+    e.collect { case l: LambdaFunction => l }.size
+
+  private[graft] def interpretedLambdas(plan: SparkPlan): Int =
+    plan.collectWithSubqueries { case p: SparkPlan => p }
+      .map(_.expressions.map(countLambdas).sum).sum
+
+  // ---- one planning pass over the catalog ------------------------------
+
+  private case class PlanFacts(lowCardWindows: Seq[String], topKFilters: Int,
+      missingGroupLimits: Seq[String], lambdas: Int)
+
+  /** Every catalog query planned once, AQE off, in name order. */
+  private lazy val catalogFacts: Seq[(String, PlanFacts)] = {
     val s = TestSpark.spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        lowCardWindowViolations(fn(s, TestSpark.sfDir).queryExecution.executedPlan)
-          .map(v => s"$name: $v")
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val plan = fn(s, TestSpark.sfDir).queryExecution.executedPlan
+      name -> PlanFacts(lowCardWindowViolations(plan), topKWindows(plan).size,
+        missingGroupLimits(plan), interpretedLambdas(plan))
+    }
+  }
+
+  test("window audit: no catalog query carries a low-cardinality window over a data-scaled frame") {
+    val offenders = catalogFacts.flatMap { case (name, f) =>
+      f.lowCardWindows.map(v => s"$name: $v")
     }
     assert(offenders.isEmpty,
       s"low-cardinality sort-windows over data-scaled frames:\n  " +
         offenders.mkString("\n  "))
+  }
+
+  test("group-limit audit: a top-k filter Spark cannot bound is flagged") {
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
+    val events = Tables.t(s, TestSpark.sfDir, "events")
+    val good = events.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    assert(topKWindows(good.queryExecution.executedPlan).size == 1)
+    assert(missingGroupLimits(good.queryExecution.executedPlan).isEmpty,
+      "auditor flagged a top-k filter Spark bounds")
+    // a whole-partition count in the same window is not an expanding
+    // frame, so Spark cannot infer the limit
+    val bad = events.withColumn("rn", row_number().over(w))
+      .withColumn("n", count(lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .filter(col("rn") <= 3)
+    assert(missingGroupLimits(bad.queryExecution.executedPlan).nonEmpty,
+      "auditor failed to flag the planted top-k filter")
+  }
+
+  test("group-limit audit: every catalog top-k filter plans a WindowGroupLimit") {
+    val offenders = catalogFacts.flatMap { case (name, f) =>
+      f.missingGroupLimits.map(v => s"$name: $v")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n  "))
+    val covered = catalogFacts.collect { case (name, f) if f.topKFilters > 0 => name }
+    println(s"[plan-audit] top-k windows: ${covered.size} queries: ${covered.mkString(",")}")
+    assert(Seq("q21_order_rank", "q67_ivf_full_probe", "q119_topk_aggregator")
+      .forall(covered.contains), s"top-k filters found only in: $covered")
+  }
+
+  /** Interpreted lambdas per query, subqueries included. Each site is
+    * one `aggregate` (a merge and a finish lambda) or one nested
+    * `transform`, so it counts 2. Every site folds an array bounded by a
+    * dimension or by one document, not by the corpus
+    * (OPTIMIZATION_r18.md, "Not yet optimized"). */
+  private val lambdaAllowlist: Map[String, Int] = Map(
+    // ordered float sums over collect_list of per-group aggregates: the
+    // sort-then-fold is the cross-engine float-determinism contract
+    "q82_mixture_weights" -> 2, "q143_token_budget" -> 2,
+    "q161_effective_budget" -> 2, "q163_source_datasheet" -> 2,
+    "q167_source_diversity" -> 2,
+    // per-doc log-prob sum over that doc's own bigram weights
+    "q95_lm_perplexity" -> 2,
+    // entropy fold over one day's event-type counts (≤ |types|)
+    "q158_daily_type_entropy" -> 2,
+    // source-pair expansion over the ≤ 20-element source array
+    "q191_source_overlap_sketch" -> 2,
+    // the weight-vector subquery's pluck over the 65536 sorted hash
+    // buckets (one row); q184 plans the shared scoring frame three times
+    "q183_quality_classifier" -> 2, "q184_classifier_pipeline" -> 6,
+    "q185_classifier_add_batch" -> 2)
+
+  test("lambda census: interpreted lambdas per query equal the allowlist") {
+    val got = catalogFacts.collect { case (name, f) if f.lambdas > 0 => name -> f.lambdas }.toMap
+    println(s"[plan-audit] lambda census: ${got.toSeq.sorted.mkString(", ")}")
+    assert(got == lambdaAllowlist,
+      s"interpreted-lambda census drifted: got $got, allowlist $lambdaAllowlist")
   }
 
   // ---- bounded top-k tails sort in one partition ----------------------

@@ -239,7 +239,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL registration works") {
-    VectorFunctions.register(spark)
     Tables.t(spark, sfDir, "embeddings").limit(5).createOrReplaceTempView("emb5")
     val r = spark.sql(
       "SELECT cosine_sim(embedding, embedding) AS c, dot_product(embedding, embedding) AS d FROM emb5")
