@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.functions._
@@ -24,92 +25,55 @@ object SimplifySelfCosine extends Rule[LogicalPlan] {
   * functions for any session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`). This is the one SQL
-  * registration path, for a cluster and for the test session alike.
-  * Users get 17 functions in plain SQL: the 15 kernels `cosine_sim`,
-  * `dot_product`, `self_cosine`, `hyperplane_bucket`,
-  * `hyperplane_codes`, `code_agreement`, `shingle_minhash`,
-  * `shingle_array`, `shingle_tf_vector`, `hashed_tf_vector`,
-  * `simhash64`, `simhash_md5`, `winnow_fingerprint`,
-  * `winnow_fingerprint_md5` and `z_order16`, all with full codegen, and
-  * Spark's Bloom-sketch pair `bloom_filter_agg` and `might_contain`.
-  * It also installs the SimplifySelfCosine optimizer rule.
+  * registration path, for a cluster and for the test session alike:
+  * it installs the SimplifySelfCosine optimizer rule and every function
+  * of `GraftExtensions.sqlFunctions`, all kernels with full codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => SimplifySelfCosine)
+    GraftExtensions.sqlFunctions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
+  }
+}
+
+object GraftExtensions {
 
   private def intArg(e: Expression): Int =
     e.eval().asInstanceOf[Number].intValue()
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => SimplifySelfCosine)
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("hyperplane_bucket"),
-      new ExpressionInfo(classOf[HyperplaneBucket].getName, "hyperplane_bucket"),
-      (exprs: Seq[Expression]) => HyperplaneBucket(exprs(0), intArg(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("shingle_minhash"),
-      new ExpressionInfo(classOf[ShingleMinHash].getName, "shingle_minhash"),
-      (exprs: Seq[Expression]) =>
-        ShingleMinHash(exprs(0), intArg(exprs(1)), intArg(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("winnow_fingerprint"),
-      new ExpressionInfo(classOf[WinnowFingerprint].getName, "winnow_fingerprint"),
-      (exprs: Seq[Expression]) =>
-        WinnowFingerprint(exprs(0), intArg(exprs(1)), intArg(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("simhash_md5"),
-      new ExpressionInfo(classOf[SimHashMd5].getName, "simhash_md5"),
-      (exprs: Seq[Expression]) => SimHashMd5(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("winnow_fingerprint_md5"),
-      new ExpressionInfo(classOf[WinnowFingerprintMd5].getName, "winnow_fingerprint_md5"),
-      (exprs: Seq[Expression]) =>
-        WinnowFingerprintMd5(exprs(0), intArg(exprs(1)), intArg(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("hashed_tf_vector"),
-      new ExpressionInfo(classOf[HashedTfVector].getName, "hashed_tf_vector"),
-      (exprs: Seq[Expression]) => HashedTfVector(exprs(0), intArg(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("self_cosine"),
-      new ExpressionInfo(classOf[SelfCosine].getName, "self_cosine"),
-      (exprs: Seq[Expression]) => SelfCosine(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("z_order16"),
-      new ExpressionInfo(classOf[ZOrderCode].getName, "z_order16"),
-      (exprs: Seq[Expression]) => ZOrderCode(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("shingle_array"),
-      new ExpressionInfo(classOf[ShingleArray].getName, "shingle_array"),
-      (exprs: Seq[Expression]) => ShingleArray(exprs(0), intArg(exprs(1)))))
-    ext.injectFunction((FunctionIdentifier("shingle_tf_vector"),
-      new ExpressionInfo(classOf[ShingleTfVector].getName, "shingle_tf_vector"),
-      (exprs: Seq[Expression]) =>
-        ShingleTfVector(exprs(0), intArg(exprs(1)), intArg(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("hyperplane_codes"),
-      new ExpressionInfo(classOf[HyperplaneBuckets].getName, "hyperplane_codes"),
-      (exprs: Seq[Expression]) =>
-        HyperplaneBuckets(exprs(0), intArg(exprs(1)), intArg(exprs(2)))))
-    ext.injectFunction((FunctionIdentifier("code_agreement"),
-      new ExpressionInfo(classOf[CodeAgreement].getName, "code_agreement"),
-      (exprs: Seq[Expression]) =>
-        CodeAgreement(exprs(0), exprs(1), intArg(exprs(2)))))
-    // Spark's own Bloom-sketch pair (internal, used by runtime row-level
-    // filtering) exposed as SQL: build with
-    //   (SELECT bloom_filter_agg(xxhash64(k), items, bits) FROM build)
-    // — the parser makes that a scalar subquery, exactly the input form
-    // might_contain's type check demands.
-    ext.injectFunction((FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2), 0, 0).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))))
-  }
+  /** The SQL function table: name, the expression class it reports, and
+    * the builder over the call's arguments. 15 kernels, then Spark's
+    * own Bloom-sketch pair (internal, used by runtime row-level
+    * filtering) exposed as SQL: build with
+    * `(SELECT bloom_filter_agg(xxhash64(k), items, bits) FROM build)` —
+    * the parser makes that a scalar subquery, exactly the input form
+    * might_contain's type check demands. */
+  val sqlFunctions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
+    ("dot_product", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("hyperplane_bucket", classOf[HyperplaneBucket], e => HyperplaneBucket(e(0), intArg(e(1)))),
+    ("shingle_minhash", classOf[ShingleMinHash],
+      e => ShingleMinHash(e(0), intArg(e(1)), intArg(e(2)))),
+    ("simhash64", classOf[SimHash64], e => SimHash64(e(0))),
+    ("winnow_fingerprint", classOf[WinnowFingerprint],
+      e => WinnowFingerprint(e(0), intArg(e(1)), intArg(e(2)))),
+    ("simhash_md5", classOf[SimHashMd5], e => SimHashMd5(e(0))),
+    ("winnow_fingerprint_md5", classOf[WinnowFingerprintMd5],
+      e => WinnowFingerprintMd5(e(0), intArg(e(1)), intArg(e(2)))),
+    ("hashed_tf_vector", classOf[HashedTfVector], e => HashedTfVector(e(0), intArg(e(1)))),
+    ("self_cosine", classOf[SelfCosine], e => SelfCosine(e(0))),
+    ("z_order16", classOf[ZOrderCode], e => ZOrderCode(e(0), e(1))),
+    ("shingle_array", classOf[ShingleArray], e => ShingleArray(e(0), intArg(e(1)))),
+    ("shingle_tf_vector", classOf[ShingleTfVector],
+      e => ShingleTfVector(e(0), intArg(e(1)), intArg(e(2)))),
+    ("hyperplane_codes", classOf[HyperplaneBuckets],
+      e => HyperplaneBuckets(e(0), intArg(e(1)), intArg(e(2)))),
+    ("code_agreement", classOf[CodeAgreement],
+      e => CodeAgreement(e(0), e(1), intArg(e(2)))),
+    ("bloom_filter_agg", classOf[BloomFilterAggregate],
+      e => BloomFilterAggregate(e(0), e(1), e(2), 0, 0).toAggregateExpression()),
+    ("might_contain", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
 }

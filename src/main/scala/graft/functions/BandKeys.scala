@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -76,16 +75,8 @@ object BandKeyKernel {
 /** Catalyst expression: 60-bit fingerprint → fused combinatorial band
   * keys (array<long>, never null elements; null only for null input). */
 case class HammingBandKeys(child: Expression, wide: Boolean)
-    extends UnaryExpression {
-
+    extends UnaryKernel[Long]("BandKeyKernel.bandKeys", wide) {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    BandKeyKernel.bandKeys(input.asInstanceOf[Long], wide)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BandKeyKernel.bandKeys($c, $wide)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(fp: Long): Any = BandKeyKernel.bandKeys(fp, wide)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,31 +35,12 @@ object MinHashKernel {
   def multiplier(i: Int): Long = GOLD * (2L * i + 1) | 1L
   def addend(i: Int): Long = MIX * i
 
-  /** One pass over the shingle array → k-long minhash signature.
-    * Null (not a MaxValue sentinel) for an empty shingle set — otherwise
-    * every shingle-less doc would share one signature and collide in all
-    * LSH bands, quadratically exploding false candidates. Matches
-    * `shingleSignature`'s null-for-short-docs behavior. */
-  def signature(shingles: ArrayData, k: Int): ArrayData = {
-    if (shingles.numElements() == 0) return null
-    val mins = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    val n = shingles.numElements()
-    while (j < n) {
-      val s = shingles.getUTF8String(j)
-      val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-      accumulate(h, mins, k)
-      j += 1
-    }
-    new GenericArrayData(mins)
-  }
-
   /** Fully fused: raw text → word n-gram shingles → signature, no
     * intermediate arrays. Shingle dedup is skipped on purpose — repeated
     * shingles cannot change a minimum. Returns null when the document has
     * fewer than n tokens (no shingles). Hashes the identical "w1 w2 w3"
-    * UTF-8 bytes as the array form, so signatures match `signature`
-    * applied to `shingles()` output. */
+    * UTF-8 bytes as the array form, so signatures match the spec-side
+    * `MinHashSignature` applied to `shingles()` output. */
   def shingleSignature(text: UTF8String, n: Int, k: Int): ArrayData = {
     val words = text.toString.split(' ').filter(_.nonEmpty)
     if (words.length < n) return null
@@ -869,7 +850,7 @@ object MinHashKernel {
       Array[Any](n, distinct, 0.0 - s))
   }
 
-  private def accumulate(h: Long, mins: Array[Long], k: Int): Unit = {
+  private[functions] def accumulate(h: Long, mins: Array[Long], k: Int): Unit = {
     var i = 0
     while (i < k) {
       val hi = h * multiplier(i) + addend(i)
@@ -879,214 +860,102 @@ object MinHashKernel {
   }
 }
 
-/** Catalyst expression: array<string> shingles → array<long> signature
-  * (null for an empty shingle set). */
-case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.signature(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashKernel.signature($c, $k);
-       |${ev.isNull} = ${ev.value} == null;
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Catalyst expression: text string → array<long> signature (nullable:
   * null when the document is too short to shingle). */
-case class ShingleMinHash(child: Expression, n: Int, k: Int) extends UnaryExpression {
-
+case class ShingleMinHash(child: Expression, n: Int, k: Int)
+    extends UnaryKernel[UTF8String]("MinHashKernel.shingleSignature", n, k) {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.shingleSignature(input.asInstanceOf[UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val code = nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashKernel.shingleSignature($c, $n, $k);
-       |${ev.isNull} = ${ev.value} == null;
-     """.stripMargin)
-    code
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def nullResult: Boolean = true
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.shingleSignature(s, n, k)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text string → 64-bit simhash fingerprint. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
+case class SimHash64(child: Expression)
+    extends UnaryKernel[UTF8String]("MinHashKernel.simhash64") {
   override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.simhash64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashKernel.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.simhash64(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → md5-keyed 64-bit simhash (oracle-safe). */
-case class SimHashMd5(child: Expression) extends UnaryExpression {
-
+case class SimHashMd5(child: Expression)
+    extends UnaryKernel[UTF8String]("MinHashKernel.simhashMd5") {
   override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.simhashMd5(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashKernel.simhashMd5($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.simhashMd5(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → sorted distinct md5-keyed winnowing
   * fingerprints as 16-hex-char strings (null below n chars). */
 case class WinnowFingerprintMd5(child: Expression, n: Int, w: Int)
-    extends UnaryExpression {
-
+    extends UnaryKernel[UTF8String]("MinHashKernel.winnowFingerprintMd5", n, w) {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.winnowFingerprintMd5(input.asInstanceOf[UTF8String], n, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashKernel.winnowFingerprintMd5($c, $n, $w);
-       |${ev.isNull} = ${ev.value} == null;
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def nullResult: Boolean = true
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.winnowFingerprintMd5(s, n, w)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → array<string> distinct word n-grams. */
-case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
-
+case class ShingleArray(child: Expression, n: Int)
+    extends UnaryKernel[UTF8String]("MinHashKernel.shingleArray", n) {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.shingleArray(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.shingleArray($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.shingleArray(s, n)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → array<binary> positional word-k-gram MD5
   * digests (index = token start position; empty for short docs). */
-case class GramDigests(child: Expression, k: Int) extends UnaryExpression {
-
+case class GramDigests(child: Expression, k: Int)
+    extends UnaryKernel[UTF8String]("MinHashKernel.gramDigests", k) {
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.gramDigests(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.gramDigests($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.gramDigests(s, k)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: (text, runs array<struct<s,e>>) →
   * struct(n_tokens, n_cut_tokens, cleaned_text) span surgery. */
 case class SpanSurgery(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
+    extends BinaryKernel[UTF8String, ArrayData]("MinHashKernel.spanSurgery") {
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_cut_tokens", LongType, nullable = false),
     StructField("cleaned_text", StringType, nullable = false)))
-
-  override def nullSafeEval(text: Any, runs: Any): Any =
-    MinHashKernel.spanSurgery(
-      text.asInstanceOf[UTF8String], runs.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, r) =>
-      s"graft.functions.MinHashKernel.spanSurgery($t, $r)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def kernel(s: UTF8String, runs: ArrayData): Any =
+    MinHashKernel.spanSurgery(s, runs)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** Catalyst expression: text → array<string> non-overlapping
   * `size`-token chunks (tokens joined by single spaces; empty for
   * token-less docs). */
-case class TokenChunks(child: Expression, size: Int) extends UnaryExpression {
-
+case class TokenChunks(child: Expression, size: Int)
+    extends UnaryKernel[UTF8String]("MinHashKernel.tokenChunks", size) {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.tokenChunks(input.asInstanceOf[UTF8String], size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.tokenChunks($c, $size)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.tokenChunks(s, size)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → L2-normalized array<float> embedding over
   * word n-gram features (nullable: null when too short to shingle). */
 case class ShingleTfVector(child: Expression, n: Int, dim: Int)
-    extends UnaryExpression {
-
+    extends UnaryKernel[UTF8String]("MinHashKernel.shingleTfVector", n, dim) {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.shingleTfVector(input.asInstanceOf[UTF8String], n, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashKernel.shingleTfVector($c, $n, $dim);
-       |${ev.isNull} = ${ev.value} == null;
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def nullResult: Boolean = true
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.shingleTfVector(s, n, dim)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → L2-normalized array<float> embedding. */
-case class HashedTfVector(child: Expression, dim: Int) extends UnaryExpression {
-
+case class HashedTfVector(child: Expression, dim: Int)
+    extends UnaryKernel[UTF8String]("MinHashKernel.hashedTfVector", dim) {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.hashedTfVector(input.asInstanceOf[UTF8String], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.hashedTfVector($c, $dim)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.hashedTfVector(s, dim)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object HashKernels {
-  def minhash_signature(shingles: Column, k: Int): Column =
-    GraftSqlBridge.column(MinHashSignature(GraftSqlBridge.expression(shingles), k))
-
   def shingle_minhash(text: Column, n: Int, k: Int): Column =
     GraftSqlBridge.column(ShingleMinHash(GraftSqlBridge.expression(text), n, k))
 
@@ -1150,180 +1019,102 @@ object HashKernels {
 
 /** Catalyst expression: count of whitespace tokens equal to any of the
   * fixed word list, one codegen'd byte pass per row. */
-case class TokenHits(child: Expression, words: Seq[String]) extends UnaryExpression {
-
+case class TokenHits(child: Expression, words: Seq[String])
+    extends UnaryKernel[UTF8String]("MinHashKernel.tokenHits") {
   override def dataType: DataType = IntegerType
-
   @transient private lazy val wordBytes: Array[Array[Byte]] =
     words.map(_.getBytes("UTF-8")).toArray
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.tokenHits(input.asInstanceOf[UTF8String], wordBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wordsRef = ctx.addReferenceObj("tokenHitWords", wordBytes, "byte[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.tokenHits($c, $wordsRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def refArgs(ctx: CodegenContext): Seq[String] =
+    Seq(ctx.addReferenceObj("tokenHitWords", wordBytes, "byte[][]"))
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.tokenHits(s, wordBytes)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → array<string> whitespace tokens (the
   * Tokenize rule), one codegen'd byte pass per row. */
-case class TokenArray(child: Expression) extends UnaryExpression {
-
+case class TokenArray(child: Expression)
+    extends UnaryKernel[UTF8String]("MinHashKernel.tokenArray") {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.tokenArray(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.tokenArray($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.tokenArray(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → array<struct<w1,w2>> adjacent-token
   * pairs (document order, duplicates preserved; empty below 2 tokens). */
-case class TokenBigrams(child: Expression) extends UnaryExpression {
-
+case class TokenBigrams(child: Expression)
+    extends UnaryKernel[UTF8String]("MinHashKernel.tokenBigrams") {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("w1", StringType, nullable = false),
     StructField("w2", StringType, nullable = false))), containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.tokenBigrams(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.tokenBigrams($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.tokenBigrams(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: array<struct<para_idx:int, para:string>> →
   * the para fields joined by single spaces in para_idx order (the
   * paragraph-dedup cleaned-text rebuild, one codegen'd pass per doc). */
-case class SortedParaJoin(child: Expression) extends UnaryExpression {
-
+case class SortedParaJoin(child: Expression)
+    extends UnaryKernel[ArrayData]("MinHashKernel.sortedParaJoin") {
   override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.sortedParaJoin(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.sortedParaJoin($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(a: ArrayData): Any = MinHashKernel.sortedParaJoin(a)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → struct(n_chars, n_distinct_chars,
   * entropy_nats) character-distribution stats, one pass per row. */
-case class CharStats(child: Expression) extends UnaryExpression {
-
+case class CharStats(child: Expression)
+    extends UnaryKernel[UTF8String]("MinHashKernel.charStats") {
   override def dataType: DataType = StructType(Seq(
     StructField("n_chars", LongType, nullable = false),
     StructField("n_distinct_chars", LongType, nullable = false),
     StructField("entropy_nats", DoubleType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.charStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.charStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.charStats(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → struct(n_tokens, n_distinct,
   * top_bigram_n) repetition counters, one pass per row. */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
-
+case class RepetitionStats(child: Expression)
+    extends UnaryKernel[UTF8String]("MinHashKernel.repetitionStats") {
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_distinct", LongType, nullable = false),
     StructField("top_bigram_n", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.repetitionStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.repetitionStats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.repetitionStats(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: count of 3-char windows present in a fixed
   * ASCII trigram set (the n-gram language-ID evidence counter). Keys
   * are packed ints in a sorted array shared across rows — the kernel
   * probes by binary search with zero per-window allocation. */
-case class TrigramHits(child: Expression, trigrams: Seq[String]) extends UnaryExpression {
-
+case class TrigramHits(child: Expression, trigrams: Seq[String])
+    extends UnaryKernel[UTF8String]("MinHashKernel.trigramHits") {
   override def dataType: DataType = IntegerType
-
   @transient private lazy val sortedKeys: Array[Int] =
     trigrams.map(MinHashKernel.trigramKey).sorted.toArray
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.trigramHits(input.asInstanceOf[UTF8String], sortedKeys)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val keysRef = ctx.addReferenceObj("trigramKeys", sortedKeys, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashKernel.trigramHits($c, $keysRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def refArgs(ctx: CodegenContext): Seq[String] =
+    Seq(ctx.addReferenceObj("trigramKeys", sortedKeys, "int[]"))
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.trigramHits(s, sortedKeys)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → sorted distinct MD5 hex digests of the
   * deterministic 1/16 char-k-gram sample (null below k chars). */
-case class SampledGramDigests(child: Expression, k: Int) extends UnaryExpression {
-
+case class SampledGramDigests(child: Expression, k: Int)
+    extends UnaryKernel[UTF8String]("MinHashKernel.sampledGramDigests", k) {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.sampledGramDigests(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashKernel.sampledGramDigests($c, $k);
-       |${ev.isNull} = ${ev.value} == null;
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def nullResult: Boolean = true
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.sampledGramDigests(s, k)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: text → sorted distinct winnowing fingerprints
   * (null for docs shorter than the n-gram size). */
-case class WinnowFingerprint(child: Expression, n: Int, w: Int) extends UnaryExpression {
-
+case class WinnowFingerprint(child: Expression, n: Int, w: Int)
+    extends UnaryKernel[UTF8String]("MinHashKernel.winnowFingerprint", n, w) {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashKernel.winnowFingerprint(input.asInstanceOf[UTF8String], n, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashKernel.winnowFingerprint($c, $n, $w);
-       |${ev.isNull} = ${ev.value} == null;
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def nullResult: Boolean = true
+  override protected def kernel(s: UTF8String): Any = MinHashKernel.winnowFingerprint(s, n, w)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Perceptual fingerprint over media payload bytes — a SimHash vote
@@ -154,33 +153,19 @@ object MediaHashKernel {
 /** Catalyst expression: binary container payload → 60-bit perceptual
   * gram-SimHash (-1 for malformed/too-short; null only for null
   * input). */
-case class MediaPHash(child: Expression) extends UnaryExpression {
-
+case class MediaPHash(child: Expression)
+    extends UnaryKernel[Array[Byte]]("MediaHashKernel.payloadPhash") {
   override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    MediaHashKernel.payloadPhash(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MediaHashKernel.payloadPhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(b: Array[Byte]): Any = MediaHashKernel.payloadPhash(b)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Catalyst expression: WAV container payload → 60-bit audio
   * energy-profile fingerprint (-1 for non-WAV/malformed/too-short;
   * null only for null input). */
-case class AudioPHash(child: Expression) extends UnaryExpression {
-
+case class AudioPHash(child: Expression)
+    extends UnaryKernel[Array[Byte]]("MediaHashKernel.audioPhash") {
   override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    MediaHashKernel.audioPhash(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MediaHashKernel.audioPhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(b: Array[Byte]): Any = MediaHashKernel.audioPhash(b)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

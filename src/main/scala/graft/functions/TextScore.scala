@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -70,19 +69,10 @@ object TextScoreKernel {
 
 /** Catalyst expression: (string, array<long>) → [n_grams, score_micro]. */
 case class LinearTextScore(left: Expression, right: Expression)
-    extends BinaryExpression {
-
+    extends BinaryKernel[UTF8String, ArrayData]("TextScoreKernel.scoreGrams") {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(text: Any, weights: Any): Any =
-    TextScoreKernel.scoreGrams(
-      text.asInstanceOf[UTF8String], weights.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, w) =>
-      s"graft.functions.TextScoreKernel.scoreGrams($t, $w)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def kernel(text: UTF8String, weights: ArrayData): Any =
+    TextScoreKernel.scoreGrams(text, weights)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }

@@ -1,60 +1,31 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native Catalyst kernels for embedding math (SURVEY.md §7.3's one
   * custom-Expression candidate).
   *
-  * The composed form (`zip_with` + `aggregate`, see llm.VectorOps.dot)
-  * materializes an intermediate array per row and walks it through
-  * generic array lambdas. These fused kernels run a single primitive
-  * loop over the float arrays inside whole-stage codegen — no
+  * The composed form (`zip_with` + `aggregate`) materializes an
+  * intermediate array per row and walks it through generic array
+  * lambdas. These fused kernels run a single primitive loop over the
+  * float arrays ([[VectorKernels]]) inside whole-stage codegen — no
   * allocation, no virtual calls — and produce bit-identical doubles
   * (same left-to-right accumulation over float→double casts), so oracle
-  * parity is unaffected. VectorFunctionsSpec pins fused == composed.
+  * parity is unaffected. The specs pin each one to its composed form:
+  * KernelReferenceSpec for l2sq_fd and self_cosine, VectorFunctionsSpec
+  * for dot_product and cosine_sim.
   */
 
 /** dot(a, b) over array<float>, accumulated in double, left to right. */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
+    extends BinaryKernel[ArrayData, ArrayData]("VectorKernels.dot") {
   override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) {
-      dot += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-      i += 1
-    }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def kernel(a: ArrayData, b: ArrayData): Any = VectorKernels.dot(a, b)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** Σ (x−c)² over (array<float> v, array<double> centroid), accumulated
@@ -65,91 +36,20 @@ case class DotProduct(left: Expression, right: Expression)
   * Bit-identical: float→double widening is exact and the accumulation
   * order is unchanged. */
 case class L2SqDist(left: Expression, right: Expression)
-    extends BinaryExpression {
-
+    extends BinaryKernel[ArrayData, ArrayData]("VectorKernels.l2sq") {
   override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = a.getFloat(i).toDouble - b.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.getFloat($i) - $b.getDouble($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def kernel(v: ArrayData, c: ArrayData): Any = VectorKernels.l2sq(v, c)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** cosine(a, b) fused in one pass: dot and both norms in a single loop. */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
+    extends BinaryKernel[ArrayData, ArrayData]("VectorKernels.cosine") {
   override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double) $a.getFloat($i);
-         |  double $y = (double) $b.getFloat($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def kernel(a: ArrayData, b: ArrayData): Any = VectorKernels.cosine(a, b)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** cosine_sim(x, x) reduced to one pass over x: na/(sqrt(na)·sqrt(na))
@@ -157,38 +57,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * bit-identical results (including NULL for null input and NaN for
   * zero/empty vectors, which a fold to literal 1.0 would erase) at a
   * third of the FLOPs. Target of the SimplifySelfCosine optimizer rule. */
-case class SelfCosine(child: Expression) extends UnaryExpression {
-
+case class SelfCosine(child: Expression)
+    extends UnaryKernel[ArrayData]("VectorKernels.selfCosine") {
   override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    var na = 0.0
-    var i = 0
-    val n = a.numElements()
-    while (i < n) { val x = a.getFloat(i).toDouble; na += x * x; i += 1 }
-    na / (math.sqrt(na) * math.sqrt(na))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val na = ctx.freshName("na")
-      val x = ctx.freshName("x")
-      s"""
-         |int $n = $a.numElements();
-         |double $na = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double) $a.getFloat($i);
-         |  $na += $x * $x;
-         |}
-         |${ev.value} = $na / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($na));
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(a: ArrayData): Any = VectorKernels.selfCosine(a)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Random-hyperplane LSH (Charikar, STOC 2002; Indyk–Motwani 1998 for
@@ -203,22 +76,64 @@ case class SelfCosine(child: Expression) extends UnaryExpression {
   * and union the candidates, exactly like MinHash banding.
   * Deterministic across partitions and engines. */
 case class HyperplaneBucket(child: Expression, bits: Int, table: Int = 0)
-    extends UnaryExpression {
-
+    extends UnaryKernel[ArrayData]("VectorKernels.hyperplaneBucket", bits, table) {
   override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.hyperplaneBucket(input.asInstanceOf[ArrayData], bits, table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.hyperplaneBucket($c, $bits, $table)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(v: ArrayData): Any =
+    VectorKernels.hyperplaneBucket(v, bits, table)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object VectorKernels {
+  /** dot(a, b) over the common prefix, accumulated in double left to
+    * right. */
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0
+    var i = 0
+    while (i < n) {
+      dot += a.getFloat(i).toDouble * b.getFloat(i).toDouble
+      i += 1
+    }
+    dot
+  }
+
+  /** Σ (v_i − c_i)² of a float vector against a double centroid over
+    * the common prefix, accumulated left to right. */
+  def l2sq(v: ArrayData, c: ArrayData): Double = {
+    val n = math.min(v.numElements(), c.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val d = v.getFloat(i).toDouble - c.getDouble(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+
+  /** dot / (|a|·|b|) with the dot and both squared norms in one loop. */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a.getFloat(i).toDouble
+      val y = b.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** [[cosine]] of a vector with itself, from its squared norm alone. */
+  def selfCosine(a: ArrayData): Double = {
+    val n = a.numElements()
+    var na = 0.0
+    var i = 0
+    while (i < n) { val x = a.getFloat(i).toDouble; na += x * x; i += 1 }
+    na / (math.sqrt(na) * math.sqrt(na))
+  }
+
   /** splitmix64 finalizer — stateless pseudo-randomness from an index. */
   def mix64(z0: Long): Long = {
     var z = z0 + 0x9E3779B97F4A7C15L
@@ -331,39 +246,22 @@ object VectorKernels {
 /** Catalyst expression: fraction of agreeing hyperplane-code bits
   * between two array<int> code columns (the cheap LSH pre-filter). */
 case class CodeAgreement(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
-
+    extends BinaryKernel[ArrayData, ArrayData]("VectorKernels.codeAgreement", bits) {
   override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    VectorKernels.codeAgreement(
-      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorKernels.codeAgreement($a, $b, $bits)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def kernel(a: ArrayData, b: ArrayData): Any =
+    VectorKernels.codeAgreement(a, b, bits)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** Catalyst expression: all probe-table hyperplane codes in one pass →
   * array<int> of length `tables`. */
 case class HyperplaneBuckets(child: Expression, bits: Int, tables: Int)
-    extends UnaryExpression {
-
+    extends UnaryKernel[ArrayData]("VectorKernels.hyperplaneBuckets", bits, tables) {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.hyperplaneBuckets(input.asInstanceOf[ArrayData], bits, tables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.hyperplaneBuckets($c, $bits, $tables)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(v: ArrayData): Any =
+    VectorKernels.hyperplaneBuckets(v, bits, tables)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Static kernel shared by Int8QuantStats eval and codegen paths. */
@@ -408,22 +306,14 @@ object QuantKernel {
 
 /** Catalyst expression: array<float> → struct(scale, mse, max_err)
   * int8-quantization error profile. */
-case class Int8QuantStats(child: Expression) extends UnaryExpression {
-
+case class Int8QuantStats(child: Expression)
+    extends UnaryKernel[ArrayData]("QuantKernel.int8Stats") {
   override def dataType: DataType = StructType(Seq(
     StructField("scale", DoubleType, nullable = false),
     StructField("mse", DoubleType, nullable = false),
     StructField("max_err", DoubleType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    QuantKernel.int8Stats(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.QuantKernel.int8Stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernel(v: ArrayData): Any = QuantKernel.int8Stats(v)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object VectorFunctions {
@@ -444,10 +334,6 @@ object VectorFunctions {
   def hyperplane_bucket(v: Column, bits: Int, table: Int = 0): Column =
     GraftSqlBridge.column(HyperplaneBucket(GraftSqlBridge.expression(v), bits, table))
 
-  /** Multi-table LSH band keys: one `table*2^bits + code` int per probe
-    * table, computed in a single vector traversal (HyperplaneBuckets).
-    * Explode + equi-join = union of per-table candidate sets; the band
-    * key is a 4-byte int, not a string. */
   /** All probe-table hyperplane codes as array<int> — carried through
     * band joins (tables ints) instead of the raw vector (dim floats) so
     * the shuffle stays narrow and the pre-filter is a popcount. */
@@ -455,8 +341,6 @@ object VectorFunctions {
     GraftSqlBridge.column(
       HyperplaneBuckets(GraftSqlBridge.expression(v), bits, tables))
 
-  /** Band keys from a precomputed codes column: table index folded into
-    * the code so keys never collide across tables. */
   /** Per-table band keys `t·2^bits + code` from the packed code array.
     * Fused (optimization r18): `tables` is a plan-time constant, so the
     * array is a STATIC CreateArray of codegen'd element_at arithmetic —
@@ -468,6 +352,9 @@ object VectorFunctions {
       org.apache.spark.sql.functions.element_at(codes, t + 1)
         + org.apache.spark.sql.functions.lit(t * (1 << bits))): _*)
 
+  /** Multi-table LSH band keys straight from a vector: one
+    * `t·2^bits + code` int per probe table. Explode + equi-join = union
+    * of per-table candidate sets; the band key is a 4-byte int. */
   def lshBandKeys(v: Column, bits: Int, tables: Int): Column =
     codeBandKeys(hyperplane_codes(v, bits, tables), bits, tables)
 

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Z-order (Morton) bit interleaving — the multi-dimensional layout key
@@ -44,7 +43,7 @@ object ZOrderKernel {
   * (`z_order16(int_col, …)`) fails cleanly at analysis time instead of
   * ClassCastException-ing in interpreted eval. */
 case class ZOrderCode(left: Expression, right: Expression)
-  extends BinaryExpression {
+    extends BinaryKernel[Long, Long]("ZOrderKernel.interleave16") {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == LongType && right.dataType == LongType)
@@ -54,17 +53,9 @@ case class ZOrderCode(left: Expression, right: Expression)
         s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
 
   override def dataType: DataType = LongType
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrderKernel.interleave16(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ZOrderKernel.interleave16($a, $b);")
-
-  override protected def withNewChildrenInternal(
-    newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def kernel(a: Long, b: Long): Any = ZOrderKernel.interleave16(a, b)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 object ZOrder {

@@ -887,29 +887,6 @@ object NearDupOps {
         graft.functions.HashKernels.simhash_md5(col("text")).as("simhash"))
       .orderBy("doc_id")
 
-  /** Composed-builtin simhash, kept as the cross-check reference for the
-    * fused kernel. */
-  def simhashComposed(s: SparkSession, dir: String): DataFrame = {
-    val tk = toks(col("text"))
-    // Bit masks are Scala-side literals (shift functions require them).
-    val bitVotes = aggregate(
-      tk,
-      array_repeat(lit(0L), 64),
-      (acc, tok) => {
-        val h = xxhash64(tok)
-        val votes = array((0 until 64).map(i =>
-          when(h.bitwiseAND(lit(1L << i)) =!= 0, 1L).otherwise(-1L)): _*)
-        zip_with(acc, votes, (x, y) => x + y)
-      })
-    // Disjoint bit contributions sum to the fingerprint (plain + == OR).
-    val sh = (0 until 64).map(i =>
-      when(element_at(bitVotes, i + 1) > 0, lit(1L << i)).otherwise(0L))
-      .reduce(_ + _)
-    t(s, dir, "documents")
-      .select(col("doc_id"), sh.as("simhash"))
-      .orderBy("doc_id")
-  }
-
   /** Shingle-TF hyperplane-LSH candidate pairs: vectorize each doc with
     * the codegen'd shingle hashed-TF kernel (feature hashing over word
     * 3-grams — no external model), bucket by multi-table hyperplane
@@ -1086,34 +1063,6 @@ object NearDupOps {
           hyperplane_codes(shingle_tf_vector(col("text"), 3, 256), bits, tables),
           bits, tables)).as("band"))
     mh.unionByName(saturated(tf, "shingle_tf")).orderBy("path", "band")
-  }
-
-  /** Brute-force thresholded 3-gram Jaccard pairs over the whole corpus
-    * — the ground-truth set the LSH pipelines must reproduce. O(n²) in
-    * the worst case by definition (it IS the verification oracle, never
-    * the production path); the differential gate runs it at fixture
-    * scales against [[minhashNearDup]] / [[docEmbedNearDup]] so a
-    * fixture regeneration that breaks candidate recall fails with a
-    * named-pair diagnostic instead of an opaque oracle hash mismatch. */
-  def exactNearDupBrute(s: SparkSession, dir: String, minJaccard: Double): DataFrame = {
-    val docSh = graft.Tables.tSpread(s, dir, "documents")
-      .filter(size(toks(col("text"))) >= 3)
-      .select(col("doc_id"),
-        graft.functions.HashKernels.shingle_array(col("text"), 3).as("sh"))
-    val sizes = docSh.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"))
-    val ex = docSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    ex.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(ex.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_inter"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        (col("n_a") + col("n_b") - col("n_inter")).as("n_union"),
-        (col("n_inter").cast("double")
-          / (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
   }
 
   /** Chunk-granular near-dup across documents — [[graft.llm.TextOps

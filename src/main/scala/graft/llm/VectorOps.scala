@@ -8,8 +8,9 @@ import graft.Tables.t
 /** Embedding similarity search (SURVEY.md §2.9 new surface).
   *
   * Vectors are `array<float>`; all math is done after an exact
-  * float→double cast so Spark's left-fold `aggregate` accumulates in the
-  * same IEEE order as the oracle's list kernels. Similarities are rounded
+  * float→double cast, and the fused kernels (`graft.functions.
+  * VectorKernels`) accumulate left to right, in the same IEEE order as
+  * the oracle's list kernels. Similarities are rounded
   * to 4 decimals *before* ranking so cross-engine ulp noise cannot flip a
   * rank.
   *
@@ -20,14 +21,6 @@ import graft.Tables.t
   * path when the query set itself is large.
   */
 object VectorOps {
-
-  /** Exact double-precision dot product of two array<double> columns,
-    * accumulated left-to-right (deterministic). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
   /** Shared ANN ranking tail: rounded cosine per (query, candidate)
     * pair from precomputed norms, then top-10 per query with vec_id

@@ -30,7 +30,7 @@ class AnnSoundnessSpec extends AnyFunSuite {
       .join(e.select(col("vec_id").as("query_id"), col("v").as("qv")), Seq("query_id"))
       .join(e, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"), col("sim"),
-        round(llm.VectorOps.cosine(col("qv"), col("v")), 4).as("exact"))
+        round(ReferenceForms.cosine(col("qv"), col("v")), 4).as("exact"))
     val bad = recomputed.filter(col("sim") =!= col("exact")).collect()
     assert(bad.isEmpty,
       s"ANN returned a score that is not the exact cosine: ${bad.mkString(", ")}")

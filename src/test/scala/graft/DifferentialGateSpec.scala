@@ -39,7 +39,7 @@ class DifferentialGateSpec extends AnyFunSuite {
 
   test("q43 minhash near-dup equals brute-force jaccard >= 0.8 at every fixture scale") {
     dirs.foreach { dir =>
-      val want = pairStats(NearDupOps.exactNearDupBrute(spark, dir, 0.8))
+      val want = pairStats(ReferenceForms.exactNearDupBrute(spark, dir, 0.8))
       val got = pairStats(NearDupOps.minhashNearDup(spark, dir))
       diff(s"q43@$dir", got, want)
     }
@@ -47,7 +47,7 @@ class DifferentialGateSpec extends AnyFunSuite {
 
   test("q49 doc-embed near-dup equals brute-force jaccard >= 0.9 at every fixture scale") {
     dirs.foreach { dir =>
-      val want = pairStats(NearDupOps.exactNearDupBrute(spark, dir, 0.9))
+      val want = pairStats(ReferenceForms.exactNearDupBrute(spark, dir, 0.9))
       val got = pairStats(NearDupOps.docEmbedNearDup(spark, dir))
       diff(s"q49@$dir", got, want)
     }
@@ -107,10 +107,10 @@ class DifferentialGateSpec extends AnyFunSuite {
         .map { case (id, tx) => (id, tx, "en", "s", tx.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-      val want = pairStats(NearDupOps.exactNearDupBrute(spark, d, 0.8))
+      val want = pairStats(ReferenceForms.exactNearDupBrute(spark, d, 0.8))
       val got = pairStats(NearDupOps.minhashNearDup(spark, d))
       diff(s"q43@trial$trial", got, want)
-      val want9 = pairStats(NearDupOps.exactNearDupBrute(spark, d, 0.9))
+      val want9 = pairStats(ReferenceForms.exactNearDupBrute(spark, d, 0.9))
       val got9 = pairStats(NearDupOps.docEmbedNearDup(spark, d))
       diff(s"q49@trial$trial", got9, want9)
     }

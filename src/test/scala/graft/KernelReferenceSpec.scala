@@ -4,40 +4,22 @@ import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.HashKernels
+import graft.functions.{HashKernels, VectorFunctions}
 
-/** Each text kernel the catalog runs compared, row for row, with the
-  * composed Spark expression it replaced. The composed forms are the
-  * reference implementations: they live here, not in `src/main`. Cases
-  * come from a fixed-seed generator (the scalatestplus bridge is not in
-  * the offline cache) over the inputs the single-space rule has to get
-  * right: empty strings, runs of spaces, leading and trailing spaces,
-  * tabs and newlines (not delimiters), multi-byte UTF-8 including
-  * surrogate pairs, and nulls. */
+/** Each text kernel the catalog runs, and the vector kernels whose loops
+  * moved into `VectorKernels`, compared row for row with the composed
+  * Spark expression it replaced. The composed forms are the reference
+  * implementations: they live here, not in `src/main`. Text cases are
+  * the shared seeded fixture ([[KernelTextFixture]]); vector cases come
+  * from a second fixed-seed generator with null, empty, zero and NaN
+  * vectors. */
 class KernelReferenceSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private val rnd = new scala.util.Random(7)
-  private val vocab = Seq("the", "a", "of", "cat", "Zoë", "naïve", "漢字",
-    "😀", "x𝄞y", "tab\tbed", "new\nline", "é")
-  private val seps = Seq(" ", " ", " ", "  ", "   ", "\t", " \t ", "\n", " \n")
-  private def text(): String = {
-    val n = rnd.nextInt(9)
-    val body = (0 until n).map { i =>
-      (if (i > 0) seps(rnd.nextInt(seps.length)) else "") +
-        vocab(rnd.nextInt(vocab.length))
-    }.mkString
-    val lead = if (rnd.nextInt(4) == 0) " " * (1 + rnd.nextInt(3)) else ""
-    val trail = if (rnd.nextInt(4) == 0) " " * (1 + rnd.nextInt(3)) else ""
-    lead + body + trail
-  }
-
-  private val fixed: Seq[Option[String]] = Seq(None, Some(""), Some(" "),
-    Some("     "), Some("\t"), Some("\n \n"), Some("a"), Some(" a "),
-    Some("a  b"), Some("😀 😀"), Some("the the  the"))
-  private lazy val docs = (fixed ++ Seq.fill(300)(
-    if (rnd.nextInt(15) == 0) None else Some(text())))
+  private val fixture = new KernelTextFixture
+  import fixture.{fixed, rnd, text}
+  private lazy val docs = fixture.texts
     .zipWithIndex.map { case (t, i) => (i.toLong, t) }
     .toDF("doc_id", "text")
 
@@ -109,6 +91,56 @@ class KernelReferenceSpec extends AnyFunSuite {
     assert(rows.length > 100 && rows.exists(_.getString(1).nonEmpty))
     val bad = rows.filter(r => r.get(1) != r.get(2))
     assert(bad.isEmpty, bad.take(5).mkString("; "))
+  }
+
+  /** (id, v array<float>, c array<double>) of equal lengths 0..8: null
+    * and empty vectors, zero vectors, NaN and ±0 elements, and random
+    * values of mixed sign. */
+  private lazy val vectors = {
+    val g = new scala.util.Random(11)
+    def elem(): Float = g.nextInt(12) match {
+      case 0 => 0.0f
+      case 1 => -0.0f
+      case 2 => Float.NaN
+      case _ => (g.nextGaussian() * 3).toFloat
+    }
+    val fixedRows = Seq[(Option[Seq[Float]], Option[Seq[Double]])](
+      (None, Some(Seq(1.0))), (Some(Seq(1.0f)), None), (None, None),
+      (Some(Nil), Some(Nil)), (Some(Seq.fill(4)(0.0f)), Some(Seq.fill(4)(0.0))),
+      (Some(Seq(Float.NaN, 1.0f)), Some(Seq(0.5, 0.5))))
+    val generated = Seq.fill(200) {
+      val n = g.nextInt(9)
+      (Some(Seq.fill(n)(elem())), Some(Seq.fill(n)(g.nextGaussian())))
+    }
+    (fixedRows ++ generated).zipWithIndex.map { case ((v, c), i) => (i.toLong, v, c) }
+      .toDF("id", "v", "c")
+  }
+
+  /** Compare `(kernel, reference)` doubles per vector row by their bits
+    * (`doubleToLongBits`: NaN equals NaN, 0.0 differs from -0.0). */
+  private def assertSameBits(kernel: Column, reference: Column): Unit = {
+    val rows = vectors.select(col("id"), kernel.as("k"), reference.as("r"))
+      .orderBy("id").collect()
+    def bits(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+    val bad = rows.filter(r => bits(r, 1) != bits(r, 2))
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
+    assert(rows.exists(_.isNullAt(1)) && rows.exists(r => !r.isNullAt(1) && r.getDouble(1).isNaN)
+      && rows.count(r => !r.isNullAt(1) && !r.getDouble(1).isNaN) > 100)
+  }
+
+  test("l2sq_fd equals aggregate(zip_with(v.cast(array<double>), c, (x-y)^2)) bit for bit") {
+    assertSameBits(VectorFunctions.l2sq_fd(col("v"), col("c")),
+      aggregate(zip_with(col("v").cast("array<double>"), col("c"),
+        (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
+  }
+
+  test("self_cosine equals the composed cosine(x, x) bit for bit") {
+    // the composed form divides by zero (an ANSI error) where the kernel
+    // returns NaN, for zero and empty vectors
+    val x = col("v").cast("array<double>")
+    assertSameBits(expr("self_cosine(v)"),
+      when(ReferenceForms.dot(x, x) === 0, lit(Double.NaN)).otherwise(ReferenceForms.cosine(x, x)))
   }
 
   test("length(translate(text, \" \", \"\")) equals the summed token lengths") {

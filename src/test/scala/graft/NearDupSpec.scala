@@ -87,7 +87,7 @@ class NearDupSpec extends AnyFunSuite {
     val composed = docs.select(col("doc_id"),
       NearDupOps.shingles(col("text"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), HashKernels.minhash_signature(col("sh"), 32).as("sig"))
+      .select(col("doc_id"), graft.functions.MinHashReference.minhash_signature(col("sh"), 32).as("sig"))
     val a = fused.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val b = composed.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(a == b)
@@ -100,7 +100,7 @@ class NearDupSpec extends AnyFunSuite {
       .select(col("doc_id"),
         graft.functions.HashKernels.simhash64(col("text")).as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = NearDupOps.simhashComposed(spark, sfDir).collect()
+    val b = ReferenceForms.simhashComposed(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
   }
@@ -423,7 +423,7 @@ class NearDupSpec extends AnyFunSuite {
     import graft.llm.NearDupOps
     // candidates from the exact-Jaccard brute pairs stand in for any
     // LSH/blocking generator: editVerify only contracts on (id_a, id_b)
-    val cand = NearDupOps.exactNearDupBrute(spark, sfDir, minJaccard = 0.5)
+    val cand = ReferenceForms.exactNearDupBrute(spark, sfDir, minJaccard = 0.5)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
     val docs = Tables.t(spark, sfDir, "documents")
     val out = NearDupOps.editVerify(docs, cand, minSim = 0.0).collect()

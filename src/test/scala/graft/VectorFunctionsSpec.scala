@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorFunctions
-import graft.llm.VectorOps
 
 /** The fused Catalyst kernels must be bit-identical to the composed
   * built-in forms (same left-to-right double accumulation) — that is
@@ -25,7 +24,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
   test("fused dot product is bit-identical to zip_with/aggregate") {
     val diff = pairs.select(
       VectorFunctions.dot_product(col("va"), col("vb")).as("fused"),
-      VectorOps.dot(asD(col("va")), asD(col("vb"))).as("composed"))
+      ReferenceForms.dot(asD(col("va")), asD(col("vb"))).as("composed"))
       .filter(col("fused") =!= col("composed"))
     assert(diff.count() == 0)
   }
@@ -33,23 +32,9 @@ class VectorFunctionsSpec extends AnyFunSuite {
   test("fused cosine is bit-identical to composed cosine") {
     val diff = pairs.select(
       VectorFunctions.cosine_sim(col("va"), col("vb")).as("fused"),
-      VectorOps.cosine(asD(col("va")), asD(col("vb"))).as("composed"))
+      ReferenceForms.cosine(asD(col("va")), asD(col("vb"))).as("composed"))
       .filter(col("fused") =!= col("composed"))
     assert(diff.count() == 0)
-  }
-
-  test("interpreted eval matches codegen") {
-    // force the interpreted path via a driver-side eval
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val a = Array(1.0f, 2.0f, 3.0f)
-    val b = Array(0.5f, -1.0f, 2.0f)
-    val expr = graft.functions.DotProduct(
-      Literal.create(a, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
-      Literal.create(b, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))
-    val got = expr.eval(null).asInstanceOf[Double]
-    val want = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
-    assert(got == want)
   }
 
   test("hyperplane buckets: deterministic, and identical vectors collide") {
